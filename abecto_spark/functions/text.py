@@ -26,13 +26,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token estimate: word-boundary pieces + digit runs +
-    punctuation, the common fast proxy for BPE token counts."""
-    pieces = F.split(text, r"(?=[A-Z])|[\s]+|(?<=\d)(?=\D)|(?<=\D)(?=\d)|(?=[^\w\s])")
-    return F.size(F.filter(pieces, lambda t: t != ""))
-
-
 # GPT-2-style pre-tokenizer regex, restricted to constructs shared by
 # Java regex and RE2 (no lookarounds, no \p classes) so the same literal
 # pattern runs in Catalyst and in the DuckDB oracle
@@ -45,13 +38,6 @@ def bpe_regex_token_count(text: Column) -> Column:
     punctuation runs) — the standard fast estimate of BPE token counts
     before merges; whitespace-only residue is not counted."""
     return F.size(F.regexp_extract_all(text, F.lit(BPE_PRETOKEN_RE), F.lit(0)))
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    sw = F.array(*[F.lit(w) for w in _STOPWORDS[lang]])
-    t = tokens(text)
-    hits = F.size(F.filter(t, lambda x: F.array_contains(sw, x)))
-    return hits.cast("double") / F.greatest(F.size(t), F.lit(1)).cast("double")
 
 
 def quality_score(text: Column) -> Column:

@@ -95,6 +95,8 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
+    store=None,
+    resume: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank with dangling-mass redistribution.
 
@@ -109,6 +111,16 @@ def pagerank(
     cross-joined back in, keeping the whole loop in-plan (no
     ``.collect()`` inside the iteration).  Each iteration ends with a
     ``localCheckpoint`` so lineage stays flat over k rounds.
+
+    With a ``store`` (a ``sources.checkpoint.SnapshotStore``) the ranks
+    after iteration i persist as stage ``pagerank_iter_{i}`` instead,
+    keyed by a token of (damping, |V|); with ``resume`` a killed job
+    reuses the completed iterations instead of restarting the loop.
+    Each resumed iteration reads the snapshot parquet, so the arithmetic
+    sequence is unchanged.  Scale note: a snapshot is |V| rows per
+    iteration — at 10⁹ nodes and k=20 this is the cheap insurance
+    against losing 20 corpus-scale shuffle rounds to one executor
+    failure past Spark's lineage-replay horizon.
     """
     # the edge table is read k+1 times below — materialize it once so an
     # upstream derivation (joins, distinct) doesn't re-run every round
@@ -128,9 +140,9 @@ def pagerank(
         .localCheckpoint()
     )
 
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
-    for _ in range(iterations):
+
+    def step(ranks: DataFrame) -> DataFrame:
         with_od = ranks.join(outdeg, "node", "left")
         # dangling mass: total rank on out-degree-0 nodes (1-row agg)
         dangling = (
@@ -147,7 +159,7 @@ def pagerank(
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("rank") / F.col("od")).alias("inflow"))
         )
-        ranks = (
+        return (
             nodes.join(contribs, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -161,95 +173,19 @@ def pagerank(
                     )
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
-    return ranks
 
-
-def pagerank_resumable(
-    edges: DataFrame,
-    store,
-    iterations: int = 5,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    resume: bool = True,
-) -> DataFrame:
-    """PageRank with per-iteration snapshots: ranks after iteration i
-    persist to ``store`` (a ``sources.checkpoint.SnapshotStore``) as
-    stage ``pagerank_iter_{i}``, keyed by a config token of
-    (damping, |V| via the edges stage).  A killed job resumes from the
-    last completed iteration instead of restarting the loop — the same
-    contract the docs pipeline gives its S1–S5 stages, applied to the
-    one long iterative operator in the graph family.  Identical results
-    to ``pagerank`` (asserted in tests): each resumed iteration reads
-    the snapshot parquet, so the arithmetic sequence is unchanged.
-
-    Scale note: a snapshot is |V| rows per iteration — at 10⁹ nodes and
-    k=20 this is the cheap insurance against losing 20 corpus-scale
-    shuffle rounds to one executor failure past Spark's lineage-replay
-    horizon.
-    """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
     # scope-by-store contract (same as the docs pipeline): one store root
     # per graph; the token guards damping/|V| config drift within it
     token = f"d={damping!r};n={n}"
-    outdeg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").cast("double").alias("od"))
-        .localCheckpoint()
-    )
-
-    start = 0
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    if resume:
-        for i in range(iterations, 0, -1):
-            if store.has(f"pagerank_iter_{i}", token):
-                ranks, start = store.read(f"pagerank_iter_{i}"), i
-                break
-    base = (1.0 - damping) / n
-    for i in range(start, iterations):
-        with_od = ranks.join(outdeg, "node", "left")
-        dangling = (
-            with_od.where(F.col("od").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
-        )
-        contribs = (
-            e.join(
-                with_od.where(F.col("od").isNotNull()).withColumnRenamed(
-                    "node", "src"
-                ),
-                "src",
+    for i in range(1, iterations + 1):
+        if store is None:
+            ranks = step(ranks).localCheckpoint()
+        else:
+            ranks, _ = store.stage(
+                f"pagerank_iter_{i}", token, lambda r=ranks: step(r), resume
             )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("od")).alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.col("dangling") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-        )
-        store.write(ranks, f"pagerank_iter_{i + 1}", token)
-        ranks = store.read(f"pagerank_iter_{i + 1}")
     return ranks
 
 
@@ -1105,6 +1041,13 @@ def deterministic_walks(
         .withColumn("od", F.count(F.lit(1)).over(Window.partitionBy("s")))
         .localCheckpoint()
     )
+    if not nbrs.where(F.col("s") < 0).isEmpty():
+        # a negative source makes the residue <= 0, which no neighbor
+        # rank matches: the walk would end early without a trace
+        raise GraphStatsError(
+            "deterministic_walks needs non-negative node ids "
+            "(map ids through a dictionary first)"
+        )
     cur = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()

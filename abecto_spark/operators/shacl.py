@@ -432,7 +432,9 @@ def _property_violations(data, closure, spo, shape, pshape, focus):
                 F.col("o_lang").alias("v_lang"),
             )
         )
-    vals = vals.localCheckpoint(eager=True)
+    # value nodes are a set: a duplicated triple is one value node, so
+    # sh:minCount/maxCount must not count it twice
+    vals = vals.distinct().localCheckpoint(eager=True)
 
     def report(df, component, value_col=None):
         return df.select(

@@ -2,8 +2,9 @@
 graph-store mutation half of the query surface (W3C SPARQL 1.1 Update
 §3).
 
-The reference executes updates through Jena's ``UpdateAction`` wherever
-a processor rewrites its model; here an update is a *pure function* on
+The reference changes its models in place through the Jena Model API
+(statement adds and removes) wherever a processor rewrites one, not
+through ``UpdateAction``; here an update is a *pure function* on
 the distributed relation — each operation compiles to anti-joins
 (delete) and unions (insert) and the updated DataFrame is returned,
 which is the shape a Spark pipeline wants (the store write is the

@@ -49,6 +49,7 @@ from __future__ import annotations
 import hashlib
 import json
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -536,26 +537,23 @@ def run_plan(
             "file_source", "url_source", "sparql_source",
             "construct", "forward_rules",
         )
-        if (
-            store is not None and resume and checkpointable
-            and store.has(step["id"], tok)
-        ):
-            state.add_primary(step["dataset"], store.read(step["id"]))
-            state.manifests[step["id"]] = store.manifest(step["id"])
+        if store is None or not checkpointable:
+            proc(state, step)
             continue
-        before = {d: len(v) for d, v in state.primary.items()}
-        proc(state, step)
-        if store is not None and checkpointable:
-            ds = step.get("dataset")
-            new_parts = state.primary[ds][before.get(ds, 0):]
-            out = new_parts[0]
-            for p in new_parts[1:]:
-                out = out.unionByName(p, allowMissingColumns=True)
-            state.manifests[step["id"]] = store.write(out, step["id"], tok)
-            # replace the lazy parts with the materialized snapshot
-            state.primary[ds] = state.primary[ds][: before.get(ds, 0)] + [
-                store.read(step["id"])
-            ]
+        ds = step["dataset"]
+        kept = len(state.primary.get(ds, []))
+
+        def build() -> DataFrame:
+            proc(state, step)
+            return reduce(
+                lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                state.primary[ds][kept:],
+            )
+
+        snapshot, state.manifests[step["id"]] = store.stage(step["id"], tok, build, resume)
+        # the step's primary output is the snapshot, not its lazy parts
+        state.primary[ds] = state.primary.get(ds, [])[:kept]
+        state.add_primary(ds, snapshot)
 
     empty_measures = spark.createDataFrame([], MEASURES_SCHEMA)
     empty_findings = spark.createDataFrame([], FINDINGS_SCHEMA)

@@ -14,6 +14,8 @@ from __future__ import annotations
 import hashlib
 import json
 from dataclasses import dataclass, field
+from functools import cache, cached_property
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -75,9 +77,15 @@ class PipelineResult:
     canonical: DataFrame
     triples: DataFrame
     measures: DataFrame
-    findings: DataFrame
+    # S5 findings have no snapshot: a resumed run builds them only when
+    # ``findings`` is first read
+    build_findings: Callable[[], DataFrame]
     metrics: dict = field(default_factory=dict)
     media_features: DataFrame | None = None
+
+    @cached_property
+    def findings(self) -> DataFrame:
+        return self.build_findings()
 
 
 class DocsPipeline:
@@ -91,15 +99,12 @@ class DocsPipeline:
         tok = cfg.token()
         metrics: dict = {}
 
-        # ---- S1: mention extraction (JVM-side regex scan) --------------
-        if resume and self.store.has("s1_mentions", tok):
-            mentions = self.store.read("s1_mentions")
-            metrics["s1_mentions"] = self.store.manifest("s1_mentions")
-        else:
-            mentions = extract_mentions(docs, cfg.rules)
-            metrics["s1_mentions"] = self.store.write(mentions, "s1_mentions", tok)
-            mentions = self.store.read("s1_mentions")
+        def stage(name: str, build: Callable[[], DataFrame]) -> DataFrame:
+            df, metrics[name] = self.store.stage(name, tok, build, resume)
+            return df
 
+        # ---- S1: mention extraction (JVM-side regex scan) --------------
+        mentions = stage("s1_mentions", lambda: extract_mentions(docs, cfg.rules))
         values = mentions_as_values(mentions)
 
         # ---- S1b: media feature extraction (interleaved non-text spans) --
@@ -108,17 +113,11 @@ class DocsPipeline:
         # enabled by config, off adds zero jobs.
         media_features = None
         if cfg.media_features:
-            if resume and self.store.has("s1b_media", tok):
-                media_features = self.store.read("s1b_media")
-                metrics["s1b_media"] = self.store.manifest("s1b_media")
-            else:
-                from ..operators.multimodal import extract_features, media_spans
+            from ..operators.multimodal import extract_features, media_spans
 
-                media_features = extract_features(
-                    media_spans(docs), dim=cfg.media_feature_dim
-                )
-                metrics["s1b_media"] = self.store.write(media_features, "s1b_media", tok)
-                media_features = self.store.read("s1b_media")
+            media_features = stage("s1b_media", lambda: extract_features(
+                media_spans(docs), dim=cfg.media_feature_dim
+            ))
 
         # ---- S2: JW entity linking --------------------------------------
         # Without exclusions the edge snapshot holds *value-level* links
@@ -127,75 +126,61 @@ class DocsPipeline:
         # value-level canonicalization scale path. With exclusions the
         # resource-level MappingGraph veto path runs instead.
         value_level = not cfg.exclusions
-        if resume and self.store.has("s2_edges", tok):
-            edges = self.store.read("s2_edges")
-            metrics["s2_edges"] = self.store.manifest("s2_edges")
-        else:
-            edges = jw_mapping(
-                values,
-                list(cfg.variables),
-                cfg.threshold,
-                case_sensitive=cfg.case_sensitive,
-                block=cfg.block,
-                star=True,  # linear edges under hot-value skew (see operator)
-                return_value_links=value_level,
-            )
-            metrics["s2_edges"] = self.store.write(edges, "s2_edges", tok)
-            edges = self.store.read("s2_edges")
+        edges = stage("s2_edges", lambda: jw_mapping(
+            values,
+            list(cfg.variables),
+            cfg.threshold,
+            case_sensitive=cfg.case_sensitive,
+            block=cfg.block,
+            star=True,  # linear edges under hot-value skew (see operator)
+            return_value_links=value_level,
+        ))
 
         # ---- S3: canonicalization (CC + exclusion veto) ------------------
-        if resume and self.store.has("s3_canonical", tok):
-            canonical = self.store.read("s3_canonical")
-            metrics["s3_canonical"] = self.store.manifest("s3_canonical")
-        else:
+        def build_canonical() -> DataFrame:
             if value_level:
                 # value-level CC introduces no synthetic star nodes —
                 # strip_synthetic would be a no-op groupBy+join over the
                 # full canonical map, so it only runs on the star path
-                canonical = canonical_from_value_links(
+                return canonical_from_value_links(
                     edges, values, list(cfg.variables), cfg.case_sensitive
                 )
-            else:
-                g = MappingGraph(self.spark)
-                g.add_incorrespondences(
-                    self.spark.createDataFrame(list(cfg.exclusions), "src string, dst string")
-                )
-                g.add_correspondences(edges)
-                canonical = strip_synthetic(g.canonical())
-            metrics["s3_canonical"] = self.store.write(canonical, "s3_canonical", tok)
-            canonical = self.store.read("s3_canonical")
+            g = MappingGraph(self.spark)
+            g.add_incorrespondences(
+                self.spark.createDataFrame(list(cfg.exclusions), "src string, dst string")
+            )
+            g.add_correspondences(edges)
+            return strip_synthetic(g.canonical())
+
+        canonical = stage("s3_canonical", build_canonical)
 
         # ---- S4: triple materialization with span provenance ------------
-        if resume and self.store.has("s4_triples", tok):
-            triples = self.store.read("s4_triples")
-            metrics["s4_triples"] = self.store.manifest("s4_triples")
-        else:
-            triples = self._materialize_triples(mentions, canonical)
-            metrics["s4_triples"] = self.store.write(triples, "s4_triples", tok)
-            triples = self.store.read("s4_triples")
+        triples = stage("s4_triples", lambda: self._materialize_triples(mentions, canonical))
 
         # ---- S5: population + property measures over the linked entities
-        members = values.select("dataset", "resource").distinct()
-        measures, findings = population_comparison(
-            self.spark, members, canonical, cfg.aspect
-        )
-        if cfg.property_measures:
-            from ..operators.property_cmp import property_comparison
-
-            pmeasures, pfindings = property_comparison(
-                self.spark, values, members, canonical, cfg.aspect,
-                list(cfg.variables),
+        # (cached: the build and a later findings read share one
+        # population_comparison)
+        @cache
+        def compare() -> tuple[DataFrame, DataFrame]:
+            members = values.select("dataset", "resource").distinct()
+            measures, findings = population_comparison(
+                self.spark, members, canonical, cfg.aspect
             )
-            measures = measures.unionByName(pmeasures)
-            findings = findings.unionByName(pfindings)
-        if not (resume and self.store.has("s5_measures", tok)):
-            metrics["s5_measures"] = self.store.write(measures, "s5_measures", tok)
-        else:
-            metrics["s5_measures"] = self.store.manifest("s5_measures")
+            if cfg.property_measures:
+                from ..operators.property_cmp import property_comparison
 
+                pmeasures, pfindings = property_comparison(
+                    self.spark, values, members, canonical, cfg.aspect,
+                    list(cfg.variables),
+                )
+                measures = measures.unionByName(pmeasures)
+                findings = findings.unionByName(pfindings)
+            return measures, findings
+
+        measures = stage("s5_measures", lambda: compare()[0])
         return PipelineResult(
-            mentions, edges, canonical, triples, measures, findings, metrics,
-            media_features,
+            mentions, edges, canonical, triples, measures,
+            lambda: compare()[1], metrics, media_features,
         )
 
     def _materialize_triples(self, mentions: DataFrame, canonical: DataFrame) -> DataFrame:

@@ -19,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -84,3 +85,20 @@ class SnapshotStore:
     def manifest(self, stage: str) -> dict:
         with open(self._manifest_path(stage)) as fh:
             return json.load(fh)
+
+    def stage(
+        self,
+        stage: str,
+        config_token: str,
+        build: Callable[[], DataFrame],
+        resume: bool = True,
+    ) -> tuple[DataFrame, dict]:
+        """Resume-or-compute one stage: with ``resume`` and a complete
+        snapshot under ``config_token``, return it unbuilt; otherwise
+        ``build()`` the frame, write it and return the read-back
+        snapshot. Either way the caller continues from parquet, never
+        from the lazy build plan. Returns ``(frame, manifest)``."""
+        if resume and self.has(stage, config_token):
+            return self.read(stage), self.manifest(stage)
+        manifest = self.write(build(), stage, config_token)
+        return self.read(stage), manifest

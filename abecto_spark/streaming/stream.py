@@ -1,7 +1,7 @@
 """Structured Streaming entry points. The reference is strictly batch
 (SURVEY.md §2.3); these extend the engine for continuous ingestion of the
-docs/events streams: incremental mention extraction and windowed quality
-metrics with watermarked late-data handling.
+docs/events streams: incremental mention extraction, sessionization and
+dedup with watermarked late-data handling.
 """
 
 from __future__ import annotations
@@ -22,25 +22,6 @@ def streaming_mentions(docs_stream: DataFrame) -> DataFrame:
     """The S1 extraction stage applied to a stream — stateless, so the
     same JVM-side regex plan runs micro-batch by micro-batch."""
     return extract_mentions(docs_stream, DEFAULT_RULES)
-
-
-def windowed_event_metrics(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Watermarked 5-minute windowed counts/sums per event type over the
-    events stream (late rows beyond the watermark dropped)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "5 minutes"), F.col("event_type"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
 
 
 def stateful_sessionize(

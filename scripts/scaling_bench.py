@@ -144,7 +144,8 @@ the host is shared and exogenous load drifts single-run timings by up to
 - **Warmup:** each child runs a 5k-doc pipeline before timing so the
   measured run is steady-state (python-worker pool, codegen, shuffle
   services are warm — a long-lived cluster pays these once, not per job).
-- **Per-stage scaling** (scripts/stage_profile.py at the same input):
+- **Per-stage scaling** (per-stage spans of a traced
+  `python3 perfbench/run.py --workload link --trace 1` run):
   the dominant S2 scoring stage scales at ~0.9 between the two levels;
   the residual gap is fixed seconds in the short S1/S3/S4/S5 stages
   (snapshot commits, driver CC, small-data shuffle rounds) that amortize

@@ -230,7 +230,7 @@ def test_degree_assortativity_star_is_minus_one(spark):
 
 
 def test_pagerank_resumable_matches_and_resumes(spark, tmp_path):
-    from abecto_spark.operators.graph_stats import pagerank, pagerank_resumable
+    from abecto_spark.operators.graph_stats import pagerank
     from abecto_spark.sources.checkpoint import SnapshotStore
 
     pairs = [(1, 2), (1, 3), (2, 3), (3, 4), (5, 3), (5, 1)]
@@ -239,7 +239,7 @@ def test_pagerank_resumable_matches_and_resumes(spark, tmp_path):
     full = {r["node"]: r["rank"] for r in pagerank(e, iterations=5).collect()}
     got = {
         r["node"]: r["rank"]
-        for r in pagerank_resumable(e, store, iterations=5).collect()
+        for r in pagerank(e, iterations=5, store=store).collect()
     }
     assert set(got) == set(full)
     for k in full:
@@ -251,16 +251,14 @@ def test_pagerank_resumable_matches_and_resumes(spark, tmp_path):
         shutil.rmtree(str(tmp_path / "pr" / f"pagerank_iter_{i}"))
     resumed = {
         r["node"]: r["rank"]
-        for r in pagerank_resumable(e, store, iterations=5).collect()
+        for r in pagerank(e, iterations=5, store=store).collect()
     }
     for k in full:
         assert resumed[k] == pytest.approx(full[k], rel=1e-12)
     # a fresh run with resume=False must not read stale snapshots
     fresh = {
         r["node"]: r["rank"]
-        for r in pagerank_resumable(
-            e, store, iterations=5, resume=False
-        ).collect()
+        for r in pagerank(e, iterations=5, store=store, resume=False).collect()
     }
     for k in full:
         assert fresh[k] == pytest.approx(full[k], rel=1e-12)
@@ -619,6 +617,22 @@ def test_deterministic_walks_hand_traced(spark):
         for r in deterministic_walks(e, seeds, walk_length=3).collect()
     )
     assert got == [(0, 1), (1, 2), (2, 3), (3, 1)]
+
+
+def test_deterministic_walks_negative_ids_are_loud(spark):
+    # a negative source gives a residue <= 0 that matches no neighbor
+    # rank, which would truncate the walk silently
+    from abecto_spark.operators.graph_stats import (
+        GraphStatsError,
+        deterministic_walks,
+    )
+
+    e = spark.createDataFrame(
+        [(-1, 2), (-1, 3), (2, -1)], "src bigint, dst bigint"
+    )
+    seeds = spark.createDataFrame([(2,)], "node bigint")
+    with pytest.raises(GraphStatsError, match="non-negative node ids"):
+        deterministic_walks(e, seeds)
 
 
 def test_deterministic_walks_stop_at_sink(spark):

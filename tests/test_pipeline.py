@@ -91,10 +91,22 @@ def test_resume_skips_completed_stages(spark, pipeline_run):
         assert man["complete"], stage
         assert man["row_count"] > 0, stage
         assert sum(man["partition_rows"].values()) == man["row_count"]
-    # re-run with resume: results identical (read from snapshots)
-    second = pipe.run(docs, resume=True)
+    # re-run with resume: no stage recomputes. The only jobs allowed are
+    # the parquet schema reads of the five snapshots (S1-S5).
+    sc = spark.sparkContext
+    sc.setJobGroup("test_resume", "resume over completed snapshots")
+    try:
+        second = pipe.run(docs, resume=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("test_resume")
+    assert len(jobs) <= 5, sorted(jobs)
+    # results identical (read from snapshots)
     assert second.metrics["s2_edges"]["row_count"] == first.metrics["s2_edges"]["row_count"]
     assert second.canonical.count() == first.canonical.count()
+    assert sorted(second.measures.collect()) == sorted(first.measures.collect())
+    # findings have no snapshot: built on first read, same as the build's
+    assert sorted(second.findings.collect()) == sorted(first.findings.collect())
 
 
 def test_config_change_invalidates_snapshots(spark, pipeline_run):

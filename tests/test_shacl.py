@@ -70,6 +70,16 @@ def test_min_max_count_and_datatype(spark):
     }
 
 
+def test_duplicate_triple_is_one_value_node(spark):
+    # the same name triple twice is one value node: [1..1] holds
+    data = _data(spark, [
+        ("urn:a", RDF_TYPE, "iri", EX + "Person", None, None),
+        ("urn:a", EX + "name", "literal", "Alice", None, None),
+        ("urn:a", EX + "name", "literal", "Alice", None, None),
+    ])
+    assert _viol(shacl_validate(data, _shapes(spark, PERSON_SHAPE))) == set()
+
+
 def test_target_class_includes_subclasses(spark):
     data = _data(spark, [
         (EX + "Student", RDFS_SUBCLASS, "iri", EX + "Person", None, None),

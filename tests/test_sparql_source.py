@@ -194,6 +194,39 @@ def test_plan_driver_sparql_source_step(spark, tmp_path):
     assert (NS + "z", NS + "z2") not in got
 
 
+def test_plan_driver_resume_reads_step_snapshots(spark, tmp_path):
+    """Checkpointable steps resume from their snapshots: with the source
+    files gone, a resumed plan still yields the same primary data."""
+    from abecto_spark.plans.driver import run_plan
+    from abecto_spark.sources.checkpoint import SnapshotStore
+
+    a, b = tmp_path / "a.nt", tmp_path / "b.nt"
+    a.write_text(f'<{NS}x> <{NS}p> <{NS}y> .\n')
+    b.write_text(f'<{NS}y> <{NS}p> <{NS}z> .\n')
+    plan = {"steps": [
+        # two paths: two parts, unioned into one snapshot
+        {"id": "src", "processor": "file_source", "dataset": "d1",
+         "params": {"path": [str(a), str(b)]}},
+        {"id": "tc", "processor": "forward_rules", "dataset": "d1",
+         "inputs": ["src"],
+         "params": {"rules":
+                    f"[(?a <{NS}p> ?b) (?b <{NS}p> ?c) -> (?a <{NS}p> ?c)]"}},
+    ]}
+    store = SnapshotStore(spark, str(tmp_path / "store"))
+    first = run_plan(spark, plan, store=store)
+    got = sorted((r["s"], r["o_value"]) for r in first.primary["d1"].collect())
+    assert got == [(NS + "x", NS + "y"), (NS + "x", NS + "z"),
+                   (NS + "y", NS + "z")]
+    assert [m["row_count"] for m in first.manifests.values()] == [2, 1]
+    a.unlink()
+    b.unlink()
+    second = run_plan(spark, plan, store=store)
+    assert sorted(
+        (r["s"], r["o_value"]) for r in second.primary["d1"].collect()
+    ) == got
+    assert second.manifests == first.manifests
+
+
 # ---------------------------------------------------------------------------
 # HttpSparqlEndpoint: the crawl protocol over a mocked HTTP transport
 # (`SparqlSourceProcessor.java:215-292` — chunked VALUES-CONSTRUCT,
