@@ -840,15 +840,173 @@ RDFS_RULES_TEXT = """
 """
 
 
+_RDFS = "http://www.w3.org/2000/01/rdf-schema#"
+_RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+_SC, _SP, _DOM, _RNG = (
+    _RDFS + n for n in ("subClassOf", "subPropertyOf", "domain", "range")
+)
+_SCHEMA_PREDS = (_SC, _SP, _DOM, _RNG)
+
+#: driver row cap of the schema-first RDFS plan: a schema with more
+#: subClassOf/subPropertyOf/domain/range rows than this, or whose
+#: closure and compiled rule table have more, runs the rule fixpoint
+RDFS_SCHEMA_MAX_ROWS = 100_000
+
+
+def _transitive_closure(pairs, cap: int):
+    """rdfs5 / rdfs11 on the driver: a -> every c joined to it by a path
+    of one or more edges, so a cycle puts a in its own set as the
+    fixpoint derives (a, a). None once the closure outgrows ``cap``."""
+    succ: dict[str, set[str]] = {}
+    for a, b in pairs:
+        succ.setdefault(a, set()).add(b)
+    out: dict[str, set[str]] = {}
+    size = 0
+    for a, direct in succ.items():
+        seen, stack = set(), list(direct)
+        while stack:
+            b = stack.pop()
+            if b not in seen:
+                seen.add(b)
+                stack.extend(succ.get(b, ()))
+        out[a] = seen
+        size += len(seen)
+        if size > cap:
+            return None
+    return out
+
+
+def _rdfs_schema_plan(rows: DataFrame):
+    """Collect and close the schema of normalized ``rows`` on the driver.
+
+    Returns ``(rules, closed)``: ``rules`` maps a data row, keyed by
+    (predicate, class) — the class is the object of an IRI ``rdf:type``
+    row, '' otherwise — to what it entails in one step of the composed
+    rules; ``closed`` is SC* and SP* as (s, p, o) rows. None when that
+    one step would not equal the fixpoint (see ``apply_rdfs``)."""
+    cap = RDFS_SCHEMA_MAX_ROWS
+    got = (
+        rows.where(F.col("p").isin(*_SCHEMA_PREDS))
+        .select("s", "p", "o_kind", "o_value", "o_lang")
+        .limit(cap + 1)
+        .collect()
+    )
+    if len(got) > cap:
+        return None
+    reserved = set(_SCHEMA_PREDS) | {_RDF_TYPE}
+    by_pred: dict[str, list] = {p: [] for p in _SCHEMA_PREDS}
+    for s, p, kind, o, lang in got:
+        if (
+            kind != "iri" or lang or not s or not o
+            or s.startswith("_:") or o.startswith("_:")
+        ):
+            return None
+        if (p == _SP and o in reserved) or (p != _SC and s in reserved):
+            return None
+        by_pred[p].append((s, o))
+    sc = _transitive_closure(by_pred[_SC], cap)  # rdfs11
+    sp = _transitive_closure(by_pred[_SP], cap)  # rdfs5
+    if sc is None or sp is None:
+        return None
+    subprops: dict[str, set[str]] = {}
+    for p, qs in sp.items():
+        for q in qs:
+            subprops.setdefault(q, set()).add(p)
+    # rdfs7: (s p o) -> (s q o) for every q in SP*(p)
+    rules = {(p, "", "lift", q) for p, qs in sp.items() for q in qs}
+    # rdfs2 / rdfs3 over the lifted rows, typed up the SC* chain (rdfs9)
+    for op, pairs in (("subj", by_pred[_DOM]), ("obj", by_pred[_RNG])):
+        for q, c in pairs:
+            for p in subprops.get(q, set()) | {q}:
+                rules.update((p, "", op, k) for k in sc.get(c, set()) | {c})
+    # rdfs9 over the input's own rdf:type rows
+    rules.update((_RDF_TYPE, c, "sup", d) for c, ds in sc.items() for d in ds)
+    closed = [
+        (a, pred, b)
+        for pred, rel in ((_SC, sc), (_SP, sp))
+        for a, bs in rel.items() for b in bs
+    ]
+    if len(rules) + len(closed) > cap:
+        return None
+    return sorted(rules), closed
+
+
 def apply_rdfs(triples: DataFrame, max_iterations: int = 50) -> DataFrame:
-    """Materialize the RDFS entailment closure (hierarchy + domain/range
-    rules above) over the triples DataFrame: base ∪ entailed.  Runs on
-    the same semi-naive fixpoint as any rule text, so per-round work is
-    proportional to newly entailed facts; schema relations
-    (subClassOf/subPropertyOf/domain/range) are ontology-sized, making
-    every rule a small-side join against the data relation.  rdfs3 types
-    only IRI objects (a literal can never be a subject; Jena's RDFS
-    reasoner guards the same way).
+    """Materialize the RDFS entailment closure (the six rules of
+    ``RDFS_RULES_TEXT``) over the triples DataFrame: base ∪ entailed.
+
+    Schema first (Urbani et al., ISWC 2009; Muñoz, Pérez & Gutierrez,
+    J. Web Semantics 2009): the subClassOf/subPropertyOf/domain/range
+    rows are ontology-sized, so they are collected and closed on the
+    driver (rdfs11, rdfs5) and composed, in the fixed order rdfs7 →
+    rdfs2/rdfs3 → rdfs9, into one rule table. The data then takes a
+    single non-recursive pass: one broadcast join of every row against
+    that table. rdfs3 types only IRI objects (a literal can never be a
+    subject; Jena's RDFS reasoner guards the same way). No data
+    fixpoint is needed because no entailed row can feed the schema.
+
+    That holds under a guard; otherwise the input runs the semi-naive
+    rule fixpoint (``apply_jena_rules``), which gives the same set when
+    both apply. The fallback is taken when the schema, or its closure
+    and rule table, has more than ``RDFS_SCHEMA_MAX_ROWS`` rows; a
+    schema subject or object is not an IRI (a literal, a blank node,
+    an empty or language-tagged term);
+    a subPropertyOf object is a schema predicate or ``rdf:type``; or
+    one of those five is the subject of a subPropertyOf, domain or
+    range row. ``max_iterations`` bounds only that fallback's rounds.
     """
-    return apply_jena_rules(triples, RDFS_RULES_TEXT,
-                            max_iterations=max_iterations)
+    rows = _norm_triples(triples).distinct().localCheckpoint(eager=True)
+    plan = _rdfs_schema_plan(rows)
+    if plan is None:
+        return apply_jena_rules(rows, RDFS_RULES_TEXT,
+                                max_iterations=max_iterations)
+    import pandas as pd
+
+    rules, closed = plan
+    spark = rows.sparkSession
+    # the two driver-side frames go through Arrow: frames built from
+    # Python rows would start Python workers to unpickle them
+    out = rows
+    if rules:
+        rule_df = spark.createDataFrame(
+            pd.DataFrame(rules, columns=["p", "cls", "op", "val"]),
+            "p string, cls string, op string, val string",
+        )
+        is_class = (
+            (F.col("p") == _RDF_TYPE) & (F.col("o_kind") == "iri")
+            & (F.col("o_lang") == "")
+        )
+        lift, on_obj = F.col("op") == "lift", F.col("op") == "obj"
+        derived = (
+            rows.withColumn(
+                "cls", F.when(is_class, F.col("o_value")).otherwise(F.lit(""))
+            )
+            .join(F.broadcast(rule_df), ["p", "cls"])
+            .where(~on_obj | (F.col("o_kind") == "iri"))
+            .select(
+                F.when(on_obj, F.col("o_value")).otherwise(F.col("s"))
+                .alias("s"),
+                F.when(lift, F.col("val")).otherwise(F.lit(_RDF_TYPE))
+                .alias("p"),
+                F.when(lift, F.col("o_kind")).otherwise(F.lit("iri"))
+                .alias("o_kind"),
+                F.when(lift, F.col("o_value")).otherwise(F.col("val"))
+                .alias("o_value"),
+                F.when(lift, F.col("o_datatype")).otherwise(F.lit(""))
+                .alias("o_datatype"),
+                F.when(lift, F.col("o_lang")).otherwise(F.lit(""))
+                .alias("o_lang"),
+            )
+        )
+        out = out.unionByName(derived)
+    if closed:
+        out = out.unionByName(
+            spark.createDataFrame(
+                pd.DataFrame(closed, columns=["s", "p", "o_value"]),
+                "s string, p string, o_value string",
+            ).select(
+                "s", "p", F.lit("iri").alias("o_kind"), "o_value",
+                F.lit("").alias("o_datatype"), F.lit("").alias("o_lang"),
+            )
+        )
+    return _denorm_triples(out.distinct())

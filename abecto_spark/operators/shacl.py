@@ -42,6 +42,8 @@ the SPARQL surface syntax (``^<iri>`` for inverse paths).
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -339,6 +341,24 @@ _KNOWN_PARAMS = {
 #: numeric datatype IRIs for the SPARQL-operator comparison used by
 #: sh:lessThan / sh:lessThanOrEquals
 _NUMERIC_DTS = set(XSD_INTEGER_TYPES) | {XSD_DECIMAL, XSD_DOUBLE, XSD_FLOAT}
+#: integer/decimal pairs (XSD_INTEGER_TYPES includes xsd:decimal)
+#: compare in this type: exact to 20 integer and 18 fractional digits,
+#: where double rounds integers past 2^53
+_WIDE_DECIMAL = "decimal(38,18)"
+
+
+def _num_cmp(op, v, v_dt, w, w_dt):
+    """``op(v, w)`` over two numeric lexical-form columns: as
+    ``_WIDE_DECIMAL`` when both datatypes are integer or decimal and
+    both values fit it, as double otherwise (NULL if not numeric)."""
+    vd, wd = v.try_cast(_WIDE_DECIMAL), w.try_cast(_WIDE_DECIMAL)
+    exact = (
+        v_dt.isin(*XSD_INTEGER_TYPES) & w_dt.isin(*XSD_INTEGER_TYPES)
+        & vd.isNotNull() & wd.isNotNull()
+    )
+    return F.when(exact, op(vd, wd)).otherwise(
+        op(v.try_cast("double"), w.try_cast("double"))
+    )
 
 
 def _closed_violations(data, spo, shape, focus):
@@ -538,20 +558,20 @@ def _property_violations(data, closure, spo, shape, pshape, focus):
         out.append(report(bad, "MaxLength", F.col("v_value")))
 
     for param, comp, op in (
-        ("minInclusive", "MinInclusive", ">="),
-        ("maxInclusive", "MaxInclusive", "<="),
-        ("minExclusive", "MinExclusive", ">"),
-        ("maxExclusive", "MaxExclusive", "<"),
+        ("minInclusive", "MinInclusive", operator.ge),
+        ("maxInclusive", "MaxInclusive", operator.le),
+        ("minExclusive", "MinExclusive", operator.gt),
+        ("maxExclusive", "MaxExclusive", operator.lt),
     ):
         lim = _one_literal(spo, pshape, SH + param)
         if lim is None:
             continue
-        bound = float(lim[1])
+        float(lim[1])  # a non-numeric limit is a shapes error
         num = F.col("v_value").try_cast("double")
-        ok = {
-            ">=": num >= bound, "<=": num <= bound,
-            ">": num > bound, "<": num < bound,
-        }[op]
+        ok = _num_cmp(
+            op, F.col("v_value"), F.coalesce("v_datatype", F.lit("")),
+            F.lit(lim[1]), F.lit(lim[2] or ""),
+        )
         # non-literal or non-numeric value nodes cannot satisfy a range
         # comparison → violations (SHACL: comparison failure violates)
         bad = vals.where(
@@ -685,14 +705,18 @@ def _property_violations(data, closure, spo, shape, pshape, focus):
             if kind != "iri":
                 raise ShaclUnsupported(f"non-IRI sh:{param} on {pshape}")
             pairs = vals.join(_other_values(v), "focus")
-            vnum = F.col("v_value").try_cast("double")
-            wnum = F.col("w_value").try_cast("double")
+            vdt = F.coalesce("v_datatype", F.lit(""))
             num_ok = (
-                F.coalesce("v_datatype", F.lit("")).isin(*_NUMERIC_DTS)
+                vdt.isin(*_NUMERIC_DTS)
                 & F.col("w_datatype").isin(*_NUMERIC_DTS)
-                & vnum.isNotNull()
-                & wnum.isNotNull()
+                & F.col("v_value").try_cast("double").isNotNull()
+                & F.col("w_value").try_cast("double").isNotNull()
             )
+
+            def num(op):
+                return _num_cmp(op, F.col("v_value"), vdt,
+                                F.col("w_value"), F.col("w_datatype"))
+
             str_ok = (
                 F.coalesce("v_datatype", F.lit("")).isin("", XSD_STRING)
                 & (F.coalesce("v_lang", F.lit("")) == "")
@@ -702,10 +726,10 @@ def _property_violations(data, closure, spo, shape, pshape, focus):
             # the SPARQL "<" operator: numeric on numeric pairs, codepoint
             # string on plain-string pairs; anything else is a type error,
             # and a failed comparison is a violation (§4.3.3)
-            lt = F.when(num_ok, vnum < wnum).when(
+            lt = F.when(num_ok, num(operator.lt)).when(
                 str_ok, F.col("v_value") < F.col("w_value")
             )
-            eq = F.when(num_ok, vnum == wnum).when(
+            eq = F.when(num_ok, num(operator.eq)).when(
                 str_ok, F.col("v_value") == F.col("w_value")
             )
             ok = lt if strict else (lt | eq)

@@ -312,9 +312,24 @@ def _uses_graphs(ops: list) -> bool:
                 return True
             if any(gt is not None for gt, _ in op.delete + op.insert):
                 return True
-            if op.where.graph_blocks:
+            if _group_uses_graphs(op.where):
                 return True
     return False
+
+
+def _group_uses_graphs(g: Group) -> bool:
+    """A GRAPH block anywhere in the pattern, nested groups included
+    (OPTIONAL, UNION, MINUS, [NOT] EXISTS, paths, subqueries, SERVICE)."""
+    if g.graph_blocks:
+        return True
+    nested = (
+        g.optionals + g.minuses + g.not_exists + g.exists
+        + [b for branches in g.unions for b in branches]
+        + [pc[2] for pc in g.path_closures]
+        + [sq.where for sq in g.subqueries]
+        + [inner for _ep, _silent, inner in g.services]
+    )
+    return any(_group_uses_graphs(n) for n in nested)
 
 
 def _const_rows(spark, quads: list, graph_mode: bool) -> DataFrame:
@@ -467,7 +482,7 @@ def apply_update(triples: DataFrame, update_text: str) -> DataFrame:
         else:
             default_graph = op.with_graph or ""
             if op.with_graph is not None:
-                if op.where.graph_blocks:
+                if _group_uses_graphs(op.where):
                     raise SparqlUnsupported(
                         "GRAPH pattern inside a WITH-scoped WHERE"
                     )

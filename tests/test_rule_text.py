@@ -799,3 +799,75 @@ def test_apply_rdfs_idempotent(spark):
     once = apply_rdfs(base)
     twice = apply_rdfs(once)
     assert once.count() == twice.count() == 3
+
+
+_RT = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+_RDFS = "http://www.w3.org/2000/01/rdf-schema#"
+_SC, _SP, _DOM, _RNG = (
+    _RDFS + n for n in ("subClassOf", "subPropertyOf", "domain", "range")
+)
+_RDFS_BASE = [
+    ("ex:A", _SC, "iri", "ex:B", None, ""),
+    ("ex:B", _SC, "iri", "ex:C", None, ""),
+    ("ex:p", _SP, "iri", "ex:q", None, ""),
+    ("ex:q", _SP, "iri", "ex:r", None, ""),
+    ("ex:q", _DOM, "iri", "ex:A", None, ""),
+    ("ex:r", _RNG, "iri", "ex:B", None, ""),
+    ("u:x", "ex:p", "iri", "u:y", None, ""),
+    ("_:d", "ex:p", "iri", "u:y", None, ""),
+    ("u:x", "ex:q", "bnode", "_:o", None, ""),
+    ("u:v", "ex:q", "iri", "u:u", None, ""),
+    ("u:m", "ex:r", "iri", "u:n", None, ""),
+    ("u:w", "ex:r", "literal", "v", None, "en"),
+    ("u:z", _RT, "iri", "ex:A", None, ""),
+    # a literal that spells a class name is not that class, nor is an
+    # IRI-kind object carrying a language tag
+    ("u:l", _RT, "literal", "ex:A", None, ""),
+    ("u:t", _RT, "iri", "ex:A", None, "en"),
+]
+# case -> (extra rows, schema-first path expected, row cap or None)
+_RDFS_CASES = {
+    "plain": ([], True, None),
+    "sc_cycle": ([("ex:C", _SC, "iri", "ex:A", None, "")], True, None),
+    "sp_cycle": ([("ex:r", _SP, "iri", "ex:p", None, "")], True, None),
+    "sp_object_type": ([("ex:p", _SP, "iri", _RT, None, "")], False, None),
+    "sp_object_subclassof": (
+        [("ex:p", _SP, "iri", _SC, None, "")], False, None,
+    ),
+    "domain_on_subclassof": (
+        [(_SC, _DOM, "iri", "ex:C", None, "")], False, None,
+    ),
+    "range_on_type": ([(_RT, _RNG, "iri", "ex:C", None, "")], False, None),
+    "literal_range": (
+        [("ex:q", _RNG, "literal", "ex:C", None, "")], False, None,
+    ),
+    "bnode_schema_subject": (
+        [("_:k", _SC, "iri", "ex:A", None, "")], False, None,
+    ),
+    # six schema rows in the base: one over the cap
+    "row_cap": ([], False, 5),
+    # seven schema rows fit, but SC* and SP* add up to nine
+    "closure_cap": ([("ex:C", _SC, "iri", "ex:D", None, "")], False, 7),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RDFS_CASES))
+def test_apply_rdfs_schema_first_matches_fixpoint(spark, monkeypatch, case):
+    from abecto_spark.operators import rule_text
+    from tests.conftest import rows_set
+
+    extra, fast, cap = _RDFS_CASES[case]
+    if cap is not None:
+        monkeypatch.setattr(rule_text, "RDFS_SCHEMA_MAX_ROWS", cap)
+    fixpoint = rule_text.apply_jena_rules
+    calls = []
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return fixpoint(*args, **kwargs)
+
+    monkeypatch.setattr(rule_text, "apply_jena_rules", spy)
+    base = spark.createDataFrame(_RDFS_BASE + extra, TRIPLES_DDL)
+    got = rows_set(rule_text.apply_rdfs(base))
+    assert bool(calls) is not fast
+    assert got == rows_set(fixpoint(base, rule_text.RDFS_RULES_TEXT))

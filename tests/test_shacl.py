@@ -444,3 +444,44 @@ shape ex:S -> ex:Thing {{
         ("urn:a", "UniqueLang", "en"),
         ("urn:a", "Closed", "x"),
     }
+
+
+def test_wide_integer_and_decimal_comparisons_are_exact(spark):
+    # 2^53 + 1 has no double: compared as doubles, each pair below ties
+    big, bigger = str(2**53), str(2**53 + 1)
+    xi, xd = XSD + "integer", XSD + "decimal"
+    shapes = _shapes_raw(spark, [
+        (EX + "S", SH + "targetSubjectsOf", "iri", EX + "n", None, None),
+        (EX + "S", SH + "property", "bnode", "_:p1", None, None),
+        ("_:p1", SH + "path", "iri", EX + "n", None, None),
+        ("_:p1", SH + "maxInclusive", "literal", big, xi, None),
+        (EX + "S", SH + "property", "bnode", "_:p2", None, None),
+        ("_:p2", SH + "path", "iri", EX + "n", None, None),
+        ("_:p2", SH + "lessThanOrEquals", "iri", EX + "m", None, None),
+        (EX + "S", SH + "property", "bnode", "_:p3", None, None),
+        ("_:p3", SH + "path", "iri", EX + "n", None, None),
+        ("_:p3", SH + "lessThan", "iri", EX + "k", None, None),
+        (EX + "S", SH + "property", "bnode", "_:p4", None, None),
+        ("_:p4", SH + "path", "iri", EX + "d", None, None),
+        ("_:p4", SH + "minExclusive", "literal", "0.3", xd, None),
+    ])
+    data = _data(spark, [
+        ("urn:a", EX + "n", "literal", bigger, xi, None),
+        ("urn:a", EX + "m", "literal", big, xi, None),
+        ("urn:a", EX + "k", "literal", bigger, xi, None),
+        ("urn:b", EX + "n", "literal", big, xi, None),
+        ("urn:b", EX + "m", "literal", bigger, xi, None),
+        ("urn:b", EX + "k", "literal", bigger, xi, None),
+        ("urn:b", EX + "d", "literal", "0.30000000000000001", xd, None),
+        ("urn:c", EX + "n", "literal", big, xi, None),
+        ("urn:c", EX + "m", "literal", big, xi, None),
+        ("urn:c", EX + "k", "literal", bigger, xi, None),
+        ("urn:c", EX + "d", "literal", "0.3", xd, None),
+    ])
+    got = _viol(shacl_validate(data, shapes))
+    assert got == {
+        ("urn:a", "MaxInclusive", bigger),
+        ("urn:a", "LessThanOrEquals", bigger),
+        ("urn:a", "LessThan", bigger),
+        ("urn:c", "MinExclusive", "0.3"),
+    }

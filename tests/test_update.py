@@ -309,3 +309,28 @@ def test_quads_using_and_variable_graph_template_loud(spark):
             WITH <urn:g1> DELETE {{ ?s ex:p ?o }}
             WHERE {{ GRAPH <urn:g2> {{ ?s ex:p ?o }} }}
         """)
+
+
+_NESTED_GRAPH_WHERES = [
+    "?s ex:p ?o OPTIONAL { GRAPH <urn:g> { ?s ex:q ?x } }",
+    "{ ?s ex:p ?o } UNION { GRAPH <urn:g> { ?s ex:p ?o } }",
+    "?s ex:p ?o MINUS { GRAPH <urn:g> { ?s ex:p ?o } }",
+    "?s ex:p ?o FILTER NOT EXISTS { GRAPH <urn:g> { ?s ex:q ?o } }",
+    "?s ex:p ?o { SELECT ?s WHERE { GRAPH <urn:g> { ?s ex:p ?z } } }",
+    "?s ex:p ?o OPTIONAL { ?s ex:q ?x"
+    " { GRAPH ?g { ?x ex:q ?y } } UNION { ?x ex:r ?y } }",
+]
+
+
+@pytest.mark.parametrize("where", _NESTED_GRAPH_WHERES)
+def test_nested_graph_block_is_loud(spark, where):
+    prefix = f"PREFIX ex: <{EX}> "
+    body = f"DELETE {{ ?s ex:p ?o }} WHERE {{ {where} }}"
+    # over plain triples the up-front named-graph check refuses it
+    g = _g(spark, [("urn:a", EX + "p", "iri", "urn:b", None, "")])
+    with pytest.raises(SparqlUnsupported, match="named-graph update"):
+        apply_update(g, prefix + body)
+    # inside a WITH scope it would otherwise match nothing, silently
+    q = _q(spark, [("urn:a", EX + "p", "iri", "urn:b", None, "", "urn:g")])
+    with pytest.raises(SparqlUnsupported, match="WITH-scoped"):
+        apply_update(q, prefix + "WITH <urn:g> " + body)
