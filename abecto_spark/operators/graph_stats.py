@@ -64,6 +64,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .rules import fixpoint
+
 
 def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Per-node (out_deg, in_deg, total_deg) over a directed edge table.
@@ -522,16 +524,16 @@ def bfs_distances(
     seed set within ``max_depth`` hops, dist = minimum hop count from
     any seed (0 for the seeds themselves).
 
-    Frontier-based: round d joins the depth-(d-1) frontier against the
-    edge table, anti-joins the already-settled set, and tags survivors
-    with dist=d — the same frontier kernel as the SPARQL seeded path
-    closure (sparql.py), re-expressed for weighted-less shortest paths.
-    Each round is one equi-join shuffle keyed on the edge source plus an
-    anti-join on the settled set; ``localCheckpoint`` keeps lineage flat
-    and the per-round driver scalar is a frontier count (early exit when
-    it drains).  Bounded by ``max_depth`` rounds — BFS layers, unlike a
-    fixpoint, are exact at whatever bound the caller picks, and the
-    driver oracle recurses to the same bound.
+    Frontier-based, on the shared fixpoint kernel (``rules.fixpoint``):
+    round d joins the depth-(d-1) frontier against the edge table, tags
+    the targets with dist=d (the round index) and anti-joins the
+    settled set on ``node`` alone — the same frontier shape as the
+    SPARQL seeded path closure (sparql.py). Each round is one equi-join
+    shuffle keyed on the edge source plus the anti-join; the kernel
+    checkpoints each round and stops when the frontier drains.  Bounded
+    by ``max_depth`` rounds — BFS layers, unlike a fixpoint, are exact
+    at whatever bound the caller picks, and the driver oracle recurses
+    to the same bound, so hitting the bound is not an error here.
 
     Scale: the frontier is never collected; settled-set anti-joins stay
     shuffle-local once both sides share the node-key partitioning, and
@@ -542,26 +544,16 @@ def bfs_distances(
         e = e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     e = e.where(F.col("s") != F.col("d")).distinct().localCheckpoint()
 
-    settled = (
-        seeds.select(F.col(seeds.columns[0]).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
+    seeds0 = seeds.select(
+        F.col(seeds.columns[0]).alias("node"), F.lit(0).cast("long").alias("dist")
     )
-    frontier = settled.select("node")
-    for depth in range(1, max_depth + 1):
-        nxt = (
-            e.join(frontier.withColumnRenamed("node", "s"), "s")
-            .select(F.col("d").alias("node"))
-            .distinct()
-            .join(settled.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(depth).cast("long"))
-            .localCheckpoint(eager=True)
+
+    def rule(frontier: DataFrame, _settled: DataFrame, depth: int) -> DataFrame:
+        return e.join(frontier.select(F.col("node").alias("s")), "s").select(
+            F.col("d").alias("node"), F.lit(depth).cast("long").alias("dist")
         )
-        if nxt.isEmpty():
-            break
-        settled = settled.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
+
+    settled, _converged = fixpoint(seeds0, rule, max_depth, key=["node"])
     return settled
 
 
@@ -918,9 +910,10 @@ def harmonic_centrality(
         .localCheckpoint(eager=True)
     )
     # settled stays a LAZY union of the per-level checkpointed
-    # frontiers — re-checkpointing the accumulated set every round
-    # would re-materialize O(rounds x |settled|) rows (measured 2x+ on
-    # the per-level-labeled state, whose volume is |S| x reach)
+    # frontiers, so this loop stays outside rules.fixpoint, whose eager
+    # re-checkpoint of the accumulated set would re-materialize
+    # O(rounds x |settled|) rows of the |S| x reach state (SCALE.md:
+    # 24.0 -> 21.3 s at sf0.1 from the lazy union alone)
     settled = level0
     frontier = level0.select("seed", "node")
     for depth in range(1, max_depth + 1):

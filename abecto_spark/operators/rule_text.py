@@ -71,6 +71,7 @@ raises ``SparqlUnsupported``.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -95,6 +96,7 @@ from ..sparql import (
     _term_struct,
     parse_construct,
 )
+from .rules import fixpoint
 
 TRIPLE_COLS = ("s", "p", "o_kind", "o_value", "o_datatype", "o_lang")
 
@@ -631,88 +633,57 @@ def apply_jena_rules(
 ) -> DataFrame:
     """Forward-chain the rules to fixpoint over the triples DataFrame and
     return base ∪ deductions (the reference adds deductions to the primary
-    model, `AbstractReasoningProcessor.java:31-47`)."""
+    model, `AbstractReasoningProcessor.java:31-47`). Raises
+    ``SparqlUnsupported`` if round ``max_iterations`` still derives rows."""
     rules = parse_jena_rules(rules_text) if isinstance(rules_text, str) else rules_text
 
-    all_rows = _norm_triples(triples).distinct().localCheckpoint(eager=True)
-    delta = all_rows
-    first = True
-    # predicate-level stratification: a noValue whose constant probe
-    # predicate no rule head can produce reads a relation that never
-    # grows, so the rule stays monotone and keeps the semi-naive delta
-    # instead of re-evaluating its full body every round
+    # semi-naive: after round 1 any new derivation uses >=1 delta fact, so
+    # each atom position scans the delta once. A rule with a noValue over
+    # a growable predicate re-evaluates naively every round — negation
+    # over a growing relation is non-monotonic, so a delta restriction
+    # would miss rows whose noValue held only for older bindings (facts
+    # never retract, matching Jena's forward semantics). Predicate-level
+    # stratification: a noValue whose constant probe predicate no rule
+    # head can produce reads a relation that never grows, so its rule
+    # stays monotone and keeps the delta.
     head_var_pred = any(
         isinstance(tp.p, Var) for r in rules for tp in r.head
     )
     head_preds = {
         tp.p.value for r in rules for tp in r.head if isinstance(tp.p, Iri)
     }
+    naive = [
+        any(
+            b.name == "noValue" and (
+                head_var_pred
+                or not isinstance(b.args[1], Iri)
+                or b.args[1].value in head_preds
+            )
+            for b in r.builtins
+        )
+        for r in rules
+    ]
 
-    def _novalue_static(r: Rule) -> bool:
-        for b in r.builtins:
-            if b.name != "noValue":
-                continue
-            p = b.args[1]
-            if head_var_pred or not isinstance(p, Iri) or p.value in head_preds:
-                return False
-        return True
-
-    nv_static = [_novalue_static(r) for r in rules]
-    for _ in range(max_iterations):
+    def rule(delta: DataFrame, all_rows: DataFrame, i: int) -> DataFrame:
         comp_all = _Compiler(all_rows)
         comp_delta = _Compiler(delta)
         news = []
         for ri, r in enumerate(rules):
-            salt = f"{ri}:{r.name}"
-            if first:
-                match, bound = _body_df(comp_all, None, r.body, None)
+            full = i == 1 or naive[ri]
+            for pos in [None] if full else range(len(r.body)):
+                match, bound = _body_df(comp_all, comp_delta, r.body, pos)
                 match, bound = _apply_builtins(
-                    comp_all, match, bound, r.builtins, salt
+                    comp_all, match, bound, r.builtins, f"{ri}:{r.name}"
                 )
                 news.append(_head_rows(match, bound, r.head))
-            else:
-                # semi-naive: any new derivation uses ≥1 delta fact; cover
-                # each atom position once. Rules with noValue over a
-                # growable predicate re-evaluate naively every round —
-                # negation over a growing relation is non-monotonic, so a
-                # delta restriction would miss rows whose noValue held
-                # only for older bindings (facts never retract, matching
-                # Jena's forward semantics). When every noValue probes a
-                # predicate no head can produce (nv_static), the probed
-                # relation is fixed and the delta restriction is sound.
-                if not nv_static[ri] and any(
-                    b.name == "noValue" for b in r.builtins
-                ):
-                    match, bound = _body_df(comp_all, None, r.body, None)
-                    match, bound = _apply_builtins(
-                        comp_all, match, bound, r.builtins, salt
-                    )
-                    news.append(_head_rows(match, bound, r.head))
-                    continue
-                for i in range(len(r.body)):
-                    match, bound = _body_df(comp_all, comp_delta, r.body, i)
-                    match, bound = _apply_builtins(
-                        comp_all, match, bound, r.builtins, salt
-                    )
-                    news.append(_head_rows(match, bound, r.head))
-        first = False
-        cand = news[0]
-        for n in news[1:]:
-            cand = cand.unionByName(n)
-        new = (
-            cand.distinct()
-            .join(all_rows, list(TRIPLE_COLS), "left_anti")
-            .localCheckpoint(eager=True)
+        return reduce(DataFrame.unionByName, news)
+
+    rows, converged = fixpoint(_norm_triples(triples), rule, max_iterations)
+    if not converged:
+        raise SparqlUnsupported(
+            f"rule fixpoint did not converge in {max_iterations} rounds"
         )
-        if new.limit(1).count() == 0:
-            break
-        # the union is re-checkpointed eagerly: a lazy union of
-        # checkpointed legs trips Spark's attribute resolution on the
-        # next localCheckpoint (key not found: o_value#N), so the copy
-        # per round is the price of a stable plan
-        all_rows = all_rows.unionByName(new).localCheckpoint(eager=True)
-        delta = new
-    return _denorm_triples(all_rows)
+    return _denorm_triples(rows)
 
 
 def _construct_grouped(comp: _Compiler, q) -> tuple[DataFrame, set]:
@@ -754,8 +725,8 @@ def apply_construct(
     deltas are not sound); callers wanting deep recursion should prefer
     ``apply_jena_rules``."""
     q = parse_construct(query_text)
-    all_rows = _norm_triples(triples).distinct().localCheckpoint(eager=True)
-    for _ in range(max_iterations):
+
+    def rule(_delta: DataFrame, all_rows: DataFrame, _i: int) -> DataFrame:
         comp = _Compiler(all_rows)
         if q.group_by or q.having:
             match, bound = _construct_grouped(comp, q)
@@ -799,16 +770,10 @@ def apply_construct(
                 match = match.offset(q.offset)
             if q.limit is not None:
                 match = match.limit(q.limit)
-        new = (
-            _head_rows(match, bound, q.template)
-            .distinct()
-            .join(all_rows, list(TRIPLE_COLS), "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if new.limit(1).count() == 0:
-            break
-        all_rows = all_rows.unionByName(new).localCheckpoint(eager=True)
-    return _denorm_triples(all_rows)
+        return _head_rows(match, bound, q.template)
+
+    rows, _converged = fixpoint(_norm_triples(triples), rule, max_iterations)
+    return _denorm_triples(rows)
 
 
 #: RDFS entailment rules (W3C RDF 1.1 Semantics §9.2.1, the rules a KG

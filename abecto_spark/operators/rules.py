@@ -7,53 +7,123 @@ per round to cut lineage (Catalyst does not iterate, SURVEY.md §4).
 
 Semi-naive: each round joins only the *delta* against the full relation,
 not all-pairs again — the work per round is proportional to new facts.
+
+``fixpoint`` is the package's one such loop. In round ``i`` (1-based)
+``rule(delta, all_rows, i)`` builds candidates; the kernel keeps one per
+``key`` (default: every column, i.e. ``distinct``; with a subset the
+other columns must be a function of the key — deduplicating on it
+partitions the rows as the anti-join needs), anti-joins ``all_rows`` on
+``key`` and checkpoints eagerly. An empty round, or ``stop(new)``, ends
+the loop; otherwise ``all_rows ∪ new`` is re-checkpointed. ``converged``
+is false only when round ``max_iterations`` still added rows; callers
+that would otherwise truncate silently raise on it.
+
+Constraint propagation is off for the whole loop: Catalyst's Union
+constraint inference trips over plans built from repeatedly
+``localCheckpoint``-ed relations of filtered scans (``key not found:
+<attr>#N``), and the inference is an optional optimisation. The switch
+counts active loops under a lock — the first to enter saves the
+session's value, the last to leave restores it — so loops on several
+threads cannot leave it off.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import threading
+from collections.abc import Callable, Sequence
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_CP_KEY = "spark.sql.constraintPropagation.enabled"
+_cp_lock = threading.Lock()
+_cp_active = 0  # loops inside constraint_propagation_off
+_cp_saved = "true"  # the value the first of them found
+Rule = Callable[[DataFrame, DataFrame, int], DataFrame]
+
+
+class FixpointNotConverged(RuntimeError):
+    """A fixpoint still derived new rows in its last allowed round."""
+
+
+@contextmanager
+def constraint_propagation_off(spark: SparkSession):
+    """Switch ``spark.sql.constraintPropagation.enabled`` off while any
+    loop is inside; the last to leave restores the saved value."""
+    global _cp_active, _cp_saved
+    with _cp_lock:
+        if _cp_active == 0:
+            _cp_saved = spark.conf.get(_CP_KEY, "true")
+            spark.conf.set(_CP_KEY, "false")
+        _cp_active += 1
+    try:
+        yield
+    finally:
+        with _cp_lock:
+            _cp_active -= 1
+            if _cp_active == 0:
+                spark.conf.set(_CP_KEY, _cp_saved)
+
+
+def fixpoint_round(
+    rule: Rule, delta: DataFrame, all_rows: DataFrame, i: int, key=None
+) -> DataFrame:
+    """Round ``i``'s new rows, lazily: ``rule``'s candidates, one per
+    ``key``, minus every row of ``all_rows`` (anti-join on ``key``)."""
+    key = list(key or all_rows.columns)
+    return (
+        rule(delta, all_rows, i)
+        .dropDuplicates(key)
+        .join(all_rows, key, "left_anti")
+    )
 
 
 def fixpoint(
     base: DataFrame,
-    rule: Callable[[DataFrame, DataFrame], DataFrame],
+    rule: Rule,
     max_iterations: int = 25,
-) -> DataFrame:
-    """Least fixpoint of ``base ∪ rule(delta, all)``.
-
-    ``rule(delta, all)`` must return candidate new rows with the same
-    schema as ``base`` given the last round's new rows and the full
-    relation (semi-naive evaluation).
-    """
-    all_rows = base.distinct().localCheckpoint(eager=True)
-    delta = all_rows
-    for _ in range(max_iterations):
-        new = (
-            rule(delta, all_rows)
-            .distinct()
-            .join(all_rows, list(base.columns), "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if new.limit(1).count() == 0:
-            break
-        all_rows = all_rows.unionByName(new).localCheckpoint(eager=True)
-        delta = new
-    return all_rows
+    key: Sequence[str] | None = None,
+    stop: Callable[[DataFrame], bool] | None = None,
+) -> tuple[DataFrame, bool]:
+    """Least fixpoint of ``base ∪ rule(delta, all, i)`` as ``(rows,
+    converged)`` (round contract in the module docstring)."""
+    with constraint_propagation_off(base.sparkSession):
+        all_rows = base.distinct().localCheckpoint(eager=True)
+        delta = all_rows
+        for i in range(1, max_iterations + 1):
+            new = fixpoint_round(rule, delta, all_rows, i, key)
+            new = new.localCheckpoint(eager=True)
+            if new.isEmpty():
+                return all_rows, True
+            all_rows = all_rows.unionByName(new).localCheckpoint(eager=True)
+            delta = new
+            if stop is not None and stop(new):
+                return all_rows, True
+        return all_rows, False
 
 
-def transitive_closure(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
-    """All-pairs reachability closure of (src, dst) edges (the fixpoint of
-    ``reach(x,z) ← reach(x,y), edge(y,z)``)."""
-    edges = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+def reach_rule(edges: DataFrame) -> Rule:
+    """``reach(x,z) ← reach(x,y), edge(y,z)`` over (src, dst) edges."""
 
-    def rule(delta: DataFrame, _all: DataFrame) -> DataFrame:
+    def rule(delta: DataFrame, _all: DataFrame, _i: int) -> DataFrame:
         return (
             delta.alias("d")
             .join(edges.alias("e"), F.col("d.dst") == F.col("e.src"))
             .select(F.col("d.src").alias("src"), F.col("e.dst").alias("dst"))
         )
 
-    return fixpoint(edges, rule, max_iterations)
+    return rule
+
+
+def transitive_closure(edges: DataFrame, max_iterations: int = 25) -> DataFrame:
+    """All-pairs reachability closure of (src, dst) edges; raises
+    ``FixpointNotConverged`` if paths longer than ``max_iterations`` + 1
+    edges still add pairs."""
+    edges = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+    reach, converged = fixpoint(edges, reach_rule(edges), max_iterations)
+    if not converged:
+        raise FixpointNotConverged(
+            f"transitive closure did not converge in {max_iterations} rounds"
+        )
+    return reach

@@ -55,6 +55,7 @@ from ..model import (
     XSD_INTEGER_TYPES,
     XSD_STRING,
 )
+from .rules import fixpoint
 
 SH = "http://www.w3.org/ns/shacl#"
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -161,7 +162,7 @@ def _rdf_list(spo, head_term):
 
 def _subclass_closure(data: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Transitive (non-reflexive) rdfs:subClassOf pairs (sub, sup) from
-    the data graph — iterative doubling-free semi-naive fixpoint; the
+    the data graph — doubling-free semi-naive ``rules.fixpoint``; the
     subclass relation of a real KG is ontology-sized, so each round is a
     small join."""
     base = (
@@ -173,25 +174,21 @@ def _subclass_closure(data: DataFrame, max_rounds: int = 20) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    closure = base
-    delta = base
-    for _ in range(max_rounds):
-        step = (
+
+    def rule(delta: DataFrame, _all: DataFrame, _i: int) -> DataFrame:
+        return (
             delta.withColumnRenamed("sup", "mid")
             .join(base.withColumnRenamed("sub", "mid"), "mid")
             .select("sub", "sup")
             .where(F.col("sub") != F.col("sup"))
-            .distinct()
-            .join(closure, ["sub", "sup"], "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if step.isEmpty():
-            return closure
-        closure = closure.unionByName(step).localCheckpoint(eager=True)
-        delta = step
-    raise ShaclUnsupported(
-        f"rdfs:subClassOf closure did not converge in {max_rounds} rounds"
-    )
+
+    closure, converged = fixpoint(base, rule, max_rounds)
+    if not converged:
+        raise ShaclUnsupported(
+            f"rdfs:subClassOf closure did not converge in {max_rounds} rounds"
+        )
+    return closure
 
 
 def _instances(data: DataFrame, closure: DataFrame, cls: str) -> DataFrame:

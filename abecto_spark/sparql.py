@@ -125,6 +125,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .model import RDF_LANG_STRING, XSD, XSD_STRING
+from .operators.rules import fixpoint
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDF_FIRST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#first"
@@ -1535,12 +1536,9 @@ class _Compiler:
 
     def _closure_df(self, entry) -> tuple[DataFrame, set[str]]:
         """Arbitrary-length path ``s (inner)mod o`` → a reachability
-        relation computed by semi-naive iteration (each round joins only
-        the delta against the one-step edges — the distributed
-        transitive-closure shape; every round is one shuffle on the join
-        key, lineage cut by eager localCheckpoint)."""
-        from .operators.rules import fixpoint
-
+        relation computed on the semi-naive kernel (``rules.fixpoint``:
+        each round joins only the delta, one shuffle on the join key,
+        lineage cut by eager localCheckpoint)."""
         s_term, a_name, inner, b_name, mod, o_term = entry[:6]
         gv = self.graph_var  # inside GRAPH ?var the closure is per graph
         edges, _ = self.group_df(inner)
@@ -1562,7 +1560,7 @@ class _Compiler:
             # iteration bound, vs. linear growth for edge extension;
             # inside GRAPH ?var the graph label is an extra join key, so
             # reachability never crosses graphs
-            def rule(delta: DataFrame, all_rows: DataFrame) -> DataFrame:
+            def rule(delta: DataFrame, all_rows: DataFrame, _i: int) -> DataFrame:
                 cond = F.col("d.b") == F.col("r.a")
                 cols = [F.col("d.a").alias("a"), F.col("r.b").alias("b")]
                 if gv is not None:
@@ -1574,21 +1572,12 @@ class _Compiler:
                     .select(*cols)
                 )
 
-            # Catalyst's Union constraint rewrite trips over repeatedly
-            # localCheckpoint-ed plans derived from filtered scans
-            # ("key not found: <attr>"); constraint propagation is an
-            # optional optimizer inference, so switch it off for the
-            # eager fixpoint rounds
-            spark = edges.sparkSession
-            conf_key = "spark.sql.constraintPropagation.enabled"
-            prev = spark.conf.get(conf_key, "true")
-            spark.conf.set(conf_key, "false")
-            try:
-                reach = fixpoint(
-                    edges, rule, max_iterations=PATH_CLOSURE_MAX_ITER
+            reach, converged = fixpoint(edges, rule, PATH_CLOSURE_MAX_ITER)
+            if not converged:
+                raise SparqlUnsupported(
+                    "path closure exceeded"
+                    f" {PATH_CLOSURE_MAX_ITER} doubling rounds"
                 )
-            finally:
-                spark.conf.set(conf_key, prev)
         else:  # '?'
             reach = edges
         if mod in ("*", "?"):
@@ -1665,65 +1654,44 @@ class _Compiler:
             F.col("b").alias("a"), F.col("a").alias("b"), *gcols
         )
         step = step.localCheckpoint(eager=True)  # reused every round
-        spark = edges.sparkSession
-        conf_key = "spark.sql.constraintPropagation.enabled"
-        prev = spark.conf.get(conf_key, "true")
-        spark.conf.set(conf_key, "false")
-        try:
-            reach = (
-                step.where(F.col("a") == _const_struct(const))
-                .select("b", *gcols).distinct().localCheckpoint(eager=True)
+        # linear frontier extension, depth bounded by PATH_SEEDED_MAX_ITER.
+        # Each kernel round chains K frontier joins into one checkpointed
+        # job: the per-round fixed cost dominates on deep/thin graphs, so
+        # K depths per job cut wall-clock ~K× there; per-step distinct()
+        # bounds within-round revisits on cyclic graphs
+        cond = F.col("d.b") == F.col("e.a")
+        ncols = [F.col("e.b").alias("b")]
+        if gv is not None:
+            cond = cond & (F.col("d.g") == F.col("e.g"))
+            ncols.append(F.col("d.g").alias("g"))
+        k = PATH_SEEDED_STEPS_PER_ROUND
+
+        def rule(delta: DataFrame, _all: DataFrame, _i: int) -> DataFrame:
+            d, cand = delta, None
+            for _ in range(k):
+                d = (
+                    d.alias("d").join(step.alias("e"), cond)
+                    .select(*ncols).distinct()
+                )
+                cand = d if cand is None else cand.unionByName(d)
+            return cand
+
+        def target_reached(new: DataFrame) -> bool:
+            # reachability probe: stop as soon as the target is reached
+            return new.where(F.col("b") == target).limit(1).count() > 0
+
+        reach, converged = fixpoint(
+            step.where(F.col("a") == _const_struct(const)).select("b", *gcols),
+            rule,
+            -(-PATH_SEEDED_MAX_ITER // k),  # ceil
+            stop=target_reached if both_const and gv is None else None,
+        )
+        if not converged:
+            raise SparqlUnsupported(
+                "seeded path closure exceeded"
+                f" {PATH_SEEDED_MAX_ITER} rounds (graph deeper than the"
+                " iteration bound)"
             )
-            delta = reach
-            # linear frontier extension: total depth covered is bounded
-            # by PATH_SEEDED_MAX_ITER (loud, never truncated). Each
-            # driver round batches PATH_SEEDED_STEPS_PER_ROUND chained
-            # frontier joins into ONE checkpointed job — the per-round
-            # fixed cost (job scheduling + checkpoint) dominates on
-            # deep/thin graphs, so covering K depths per job cuts
-            # wall-clock ~K× there; per-step distinct() bounds any
-            # within-round revisit blowup on cyclic graphs
-            cond = F.col("d.b") == F.col("e.a")
-            ncols = [F.col("e.b").alias("b")]
-            if gv is not None:
-                cond = cond & (F.col("d.g") == F.col("e.g"))
-                ncols.append(F.col("d.g").alias("g"))
-            k = PATH_SEEDED_STEPS_PER_ROUND
-            rounds = -(-PATH_SEEDED_MAX_ITER // k)  # ceil
-            for _ in range(rounds):
-                d = delta
-                cand = None
-                for _ in range(k):
-                    d = (
-                        d.alias("d")
-                        .join(step.alias("e"), cond)
-                        .select(*ncols)
-                        .distinct()
-                    )
-                    cand = d if cand is None else cand.unionByName(d)
-                new = (
-                    cand.distinct()
-                    .join(reach, ["b", *gcols], "left_anti")
-                    .localCheckpoint(eager=True)
-                )
-                if new.limit(1).count() == 0:
-                    break
-                reach = reach.unionByName(new).localCheckpoint(eager=True)
-                delta = new
-                if (
-                    both_const
-                    and gv is None
-                    and new.where(F.col("b") == target).limit(1).count() > 0
-                ):
-                    break  # reachability probe: target reached, stop early
-            else:
-                raise SparqlUnsupported(
-                    "seeded path closure exceeded"
-                    f" {PATH_SEEDED_MAX_ITER} rounds (graph deeper than the"
-                    " iteration bound)"
-                )
-        finally:
-            spark.conf.set(conf_key, prev)
         if mod == "*":
             if gv is None:
                 # §18.4 ZeroLengthPath: the constant matches itself
@@ -3080,26 +3048,22 @@ def sparql_describe(triples: DataFrame, query_text: str) -> DataFrame:
             ).select(F.col(n)["value"].alias("r"))
             res = sel if res is None else res.unionByName(sel)
     assert res is not None  # parse_describe guarantees >=1 target
-    seen = res.distinct().localCheckpoint(eager=True)
-    frontier = seen
-    out: DataFrame | None = None
-    for _ in range(_DESCRIBE_MAX_ROUNDS):
-        stmts = triples.join(frontier, F.col("s") == F.col("r"), "left_semi")
-        out = stmts if out is None else out.unionByName(stmts)
-        nxt = (
-            stmts.where(F.col("o_kind") == "bnode")
+
+    # close the set of reached resources (targets plus blank-node objects
+    # of reached subjects), then take their statements once: every
+    # reached resource is a frontier exactly once, so this equals the
+    # union of each round's statements
+    def rule(delta: DataFrame, _all: DataFrame, _i: int) -> DataFrame:
+        return (
+            triples.join(delta, F.col("s") == F.col("r"), "left_semi")
+            .where(F.col("o_kind") == "bnode")
             .select(F.col("o_value").alias("r"))
-            .distinct()
-            .join(seen, "r", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        seen = seen.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    else:
+
+    seen, converged = fixpoint(res, rule, _DESCRIBE_MAX_ROUNDS)
+    if not converged:
         raise SparqlUnsupported("DESCRIBE blank-node closure did not converge")
-    return out.distinct()
+    return triples.join(seen, F.col("s") == F.col("r"), "left_semi").distinct()
 
 
 def aspect_pattern_values(

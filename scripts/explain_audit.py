@@ -621,6 +621,26 @@ def main() -> int:
         "LeftAnti" in p,
     )
 
+    # rules.fixpoint: one lazily built transitive_closure round (round 1,
+    # delta = all rows = the edges) — the kernel's delta exclusion must
+    # be a keyed anti join, never a nested loop or a cartesian product
+    from abecto_spark.operators.rules import fixpoint_round, reach_rule
+
+    p = plan_of(fixpoint_round(reach_rule(edges), edges, edges, 1))
+    sections.append(("rule_fixpoint single kernel round (rules.fixpoint)", p))
+    anti = [
+        b.split("\n", 1)[0] for b in p.split("\n\n") if "Join type: LeftAnti" in b
+    ]
+    check(
+        "fixpoint round: delta exclusion is a LeftAnti hash join"
+        " (no BroadcastNestedLoopJoin/CartesianProduct)",
+        len(anti) == 1
+        and re.search(r"(SortMerge|ShuffledHash|BroadcastHash)Join$", anti[0])
+        and "BroadcastNestedLoopJoin" not in p
+        and "CartesianProduct" not in p,
+        anti[0] if anti else "no LeftAnti join",
+    )
+
     # personalized_pagerank: same update-step shape as pagerank plus the
     # reset-vector multiply; the dangling 1-row aggregate must broadcast
     rv = nodes.join(

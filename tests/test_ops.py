@@ -17,7 +17,12 @@ from abecto_spark.operators.dedup import (
     simhash,
     simhash_candidates,
 )
-from abecto_spark.operators.rules import transitive_closure
+from abecto_spark.operators.rules import (
+    FixpointNotConverged,
+    constraint_propagation_off,
+    fixpoint,
+    transitive_closure,
+)
 from abecto_spark.functions.text import document_stats
 
 
@@ -385,6 +390,134 @@ def test_transitive_closure(spark):
         ("a", "b"), ("b", "c"), ("c", "d"), ("x", "y"),
         ("a", "c"), ("a", "d"), ("b", "d"),
     }
+
+
+def test_fixpoint_round_index_and_key(spark):
+    # each round tags its rows with the round index; it also re-derives
+    # every known x under a fresh tag, which only the anti-join on the
+    # key subset ["x"] discards (on all columns it never converges)
+    base = spark.createDataFrame([(0, 0)], "x bigint, r bigint")
+
+    def rule(delta, all_rows, i):
+        step = delta.where(F.col("x") < 3).select(
+            (F.col("x") + 1).alias("x"), F.lit(i).cast("long").alias("r")
+        )
+        redo = all_rows.select("x", F.lit(i + 100).cast("long").alias("r"))
+        return step.unionByName(redo)
+
+    rows, converged = fixpoint(base, rule, 10, key=["x"])
+    assert converged
+    assert {tuple(r) for r in rows.collect()} == {(0, 0), (1, 1), (2, 2), (3, 3)}
+    _rows, converged = fixpoint(base, rule, 10)
+    assert not converged
+
+
+def test_fixpoint_stop_and_bound(spark):
+    def rule(delta, _all, _i):
+        return delta.select((F.col("x") + 1).alias("x"))
+
+    base = spark.createDataFrame([(0,)], "x bigint")
+    rows, converged = fixpoint(
+        base, rule, 10, stop=lambda new: new.where(F.col("x") >= 2).count() > 0
+    )
+    assert converged
+    assert {r.x for r in rows.collect()} == {0, 1, 2}
+    # round 3 (the bound) still adds x=3: not converged, rows kept
+    rows, converged = fixpoint(base, rule, 3)
+    assert not converged
+    assert {r.x for r in rows.collect()} == {0, 1, 2, 3}
+
+
+@pytest.mark.parametrize("start", ["true", "false"])
+def test_constraint_propagation_toggle_counts_loops(spark, start):
+    key = "spark.sql.constraintPropagation.enabled"
+    orig = spark.conf.get(key, "true")
+    spark.conf.set(key, start)
+    try:
+        a = constraint_propagation_off(spark)
+        b = constraint_propagation_off(spark)
+        a.__enter__()
+        b.__enter__()
+        a.__exit__(None, None, None)
+        assert spark.conf.get(key) == "false"  # B is still inside
+        b.__exit__(None, None, None)
+        assert spark.conf.get(key) == start
+    finally:
+        spark.conf.set(key, orig)
+
+
+def _chain_triples(spark, n, p="urn:p", kind="iri"):
+    rows = [(f"urn:n{i}", p, kind, f"urn:n{i + 1}", None, None) for i in range(n)]
+    return spark.createDataFrame(
+        rows,
+        "s string, p string, o_kind string, o_value string,"
+        " o_datatype string, o_lang string",
+    )
+
+
+def _closure_30_chain(spark, _mp):
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(30)], "src string, dst string"
+    )
+    transitive_closure(edges)
+
+
+def _jena_transitive(spark, _mp):
+    from abecto_spark.operators.rule_text import apply_jena_rules
+
+    rule = "[t: (?a <urn:p> ?b) (?b <urn:p> ?c) -> (?a <urn:p> ?c)]"
+    apply_jena_rules(_chain_triples(spark, 10), rule, max_iterations=3)
+
+
+def _path_doubling(spark, mp):
+    import abecto_spark.sparql as sparql
+
+    mp.setattr(sparql, "PATH_CLOSURE_MAX_ITER", 1)
+    sparql.sparql_select(
+        _chain_triples(spark, 5), "SELECT ?x ?y WHERE { ?x <urn:p>+ ?y }"
+    ).collect()
+
+
+def _seeded_closure(spark, mp):
+    import abecto_spark.sparql as sparql
+
+    mp.setattr(sparql, "PATH_SEEDED_MAX_ITER", sparql.PATH_SEEDED_STEPS_PER_ROUND)
+    sparql.sparql_select(
+        _chain_triples(spark, 10), "SELECT ?y WHERE { <urn:n0> <urn:p>+ ?y }"
+    ).collect()
+
+
+def _describe_bnodes(spark, mp):
+    import abecto_spark.sparql as sparql
+
+    mp.setattr(sparql, "_DESCRIBE_MAX_ROUNDS", 1)
+    t = _chain_triples(spark, 3, kind="bnode")
+    sparql.sparql_describe(t, "DESCRIBE <urn:n0>").collect()
+
+
+def _subclass_chain(spark, _mp):
+    from abecto_spark.operators.shacl import RDFS_SUBCLASS, _subclass_closure
+
+    _subclass_closure(_chain_triples(spark, 3, p=RDFS_SUBCLASS), max_rounds=1)
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        _closure_30_chain, _jena_transitive, _path_doubling,
+        _seeded_closure, _describe_bnodes, _subclass_chain,
+    ],
+    ids=lambda run: run.__name__.lstrip("_"),
+)
+def test_fixpoint_loops_raise_past_their_bound(spark, monkeypatch, run):
+    from abecto_spark.operators.shacl import ShaclUnsupported
+    from abecto_spark.sparql import SparqlUnsupported
+
+    with pytest.raises(
+        (FixpointNotConverged, SparqlUnsupported, ShaclUnsupported),
+        match="converge|exceeded",
+    ):
+        run(spark, monkeypatch)
 
 
 def test_multimodal_plumbing(spark):
