@@ -8,15 +8,21 @@ itself, the natural next consumer in a kg_construct deployment).
                            edge table (one groupBy per direction,
                            map-side partial aggregation; a full-outer
                            join on the node key merges the two).
-  * pagerank             — fixed-iteration PageRank (damping d,
-                           k iterations): per iteration one shuffle on
-                           the destination key.  Dangling mass is an
-                           in-plan 1-row aggregate broadcast-crossed
-                           back into the update, so the loop never
-                           collects to the driver; ``localCheckpoint``
-                           truncates lineage each round (same discipline
-                           as operators/closure.py).  Hot destination
-                           nodes (in-degree skew) are handled by Spark's
+  * pagerank, pagerank_weighted, personalized_pagerank
+                         — fixed-iteration PageRank (damping d, k
+                           iterations), uniform, edge-weighted and
+                           seed-personalized.  All three run the one
+                           lazy round ``pagerank_round`` in one loop; they
+                           differ only in the contribution expression
+                           (rank/od or rank·w/od) and in the restart and
+                           teleport terms.  Per round one shuffle on the
+                           destination key.  Dangling mass is an in-plan
+                           1-row aggregate broadcast-crossed back into
+                           the update, so the loop never collects to the
+                           driver; ``localCheckpoint`` (or a snapshot
+                           stage, for ``pagerank(store=...)``) truncates
+                           lineage each round.  Hot destination nodes
+                           (in-degree skew) are handled by Spark's
                            partial aggregation: contributions combine
                            map-side before the shuffle.
   * triangle_counts      — per-node triangle participation via the
@@ -48,10 +54,11 @@ itself, the natural next consumer in a kg_construct deployment).
                            frontier joins with a settled-set anti-join;
                            bounded by max_depth rounds, early exit when
                            the frontier drains.
-  * personalized_pagerank— fixed-iteration PPR: reset vector uniform
-                           over a seed set, dangling mass teleports to
-                           the seeds; same in-plan dangling aggregate
-                           and per-round localCheckpoint as pagerank.
+
+The undirected operators (triangle_counts, kcore, link_prediction_scores,
+clustering_coefficient, degree_assortativity, label_propagation) read
+one simple-graph builder (``_simple_graph``: least/greatest, no
+self-loops, distinct) and one degree builder (``_degrees``).
 
 Scale notes: every operator is groupBy/join-shaped with no driver-side
 iteration over data (pagerank's only scalar is |V|, one count).  Degree
@@ -61,6 +68,8 @@ the dedup family's banded LSH bounds candidate pairs.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -89,6 +98,94 @@ def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFr
             .alias("total_deg"),
         )
     )
+
+
+def pagerank_round(
+    ranks: DataFrame,
+    e: DataFrame,
+    od: DataFrame,
+    nodes: DataFrame,
+    damping: float,
+    contrib,
+    restart,
+    teleport,
+) -> DataFrame:
+    """One PageRank round, lazily: (node, rank) for every row of ``nodes``
+
+        rank'(v) = restart + d * (sum_{u->v} contrib + teleport)
+
+    ``e`` is the edge table (src, dst[, w]); ``od`` holds (node, od), the
+    out-degree or total out-weight of every node with an out-edge.
+    ``contrib`` is a column over the edge joined to its source's (rank,
+    od); ``restart`` and ``teleport`` are columns over ``nodes`` crossed
+    with the 1-row ``dangling`` aggregate, the total rank on nodes
+    without out-edges.
+    """
+    with_od = ranks.join(od, "node", "left")
+    dangling = (
+        with_od.where(F.col("od").isNull())
+        .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
+    )
+    contribs = (
+        e.join(
+            with_od.where(F.col("od").isNotNull()).withColumnRenamed(
+                "node", "src"
+            ),
+            "src",
+        )
+        .groupBy(F.col("dst").alias("node"))
+        .agg(F.sum(contrib).alias("inflow"))
+    )
+    return (
+        nodes.join(contribs, "node", "left")
+        .crossJoin(F.broadcast(dangling))
+        .select(
+            "node",
+            (
+                restart
+                + F.lit(damping)
+                * (F.coalesce("inflow", F.lit(0.0)) + teleport)
+            ).alias("rank"),
+        )
+    )
+
+
+def _pagerank_graph(edges: DataFrame, src: str, dst: str, weight=None):
+    """(e, nodes, od) for ``pagerank_round``: the edge table, its node
+    set and the per-source out-degree (or, with ``weight``, the summed
+    out-weight ``od``).  Every round reads all three, so each is
+    materialized once; the unweighted edge table carries no ``w``."""
+    cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
+    if weight is not None:
+        cols.append(F.col(weight).cast("double").alias("w"))
+    e = edges.select(*cols).localCheckpoint()
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .unionByName(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint()
+    )
+    out = F.count("*").cast("double") if weight is None else F.sum("w")
+    od = (
+        e.groupBy(F.col("src").alias("node"))
+        .agg(out.alias("od"))
+        .localCheckpoint()
+    )
+    return e, nodes, od
+
+
+def _pagerank_loop(ranks, iterations, *round_args, store=None, token="",
+                   resume=True) -> DataFrame:
+    """``iterations`` rounds of ``pagerank_round(ranks, *round_args)``,
+    each cut by ``localCheckpoint`` or, with a ``store``, written as
+    snapshot stage ``pagerank_iter_{i}`` (resumed when complete)."""
+    for i in range(1, iterations + 1):
+        step = partial(pagerank_round, ranks, *round_args)
+        if store is None:
+            ranks = step().localCheckpoint()
+        else:
+            ranks, _ = store.stage(f"pagerank_iter_{i}", token, step, resume)
+    return ranks
 
 
 def pagerank(
@@ -124,83 +221,22 @@ def pagerank(
     against losing 20 corpus-scale shuffle rounds to one executor
     failure past Spark's lineage-replay horizon.
     """
-    # the edge table is read k+1 times below — materialize it once so an
-    # upstream derivation (joins, distinct) doesn't re-run every round
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e, nodes, od = _pagerank_graph(edges, src, dst)
     n = nodes.count()  # the one driver scalar: |V|
-    outdeg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").cast("double").alias("od"))
-        .localCheckpoint()
-    )
-
-    base = (1.0 - damping) / n
-
-    def step(ranks: DataFrame) -> DataFrame:
-        with_od = ranks.join(outdeg, "node", "left")
-        # dangling mass: total rank on out-degree-0 nodes (1-row agg)
-        dangling = (
-            with_od.where(F.col("od").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
-        )
-        contribs = (
-            e.join(
-                with_od.where(F.col("od").isNotNull()).withColumnRenamed(
-                    "node", "src"
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("od")).alias("inflow"))
-        )
-        return (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.col("dangling") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-        )
-
     # scope-by-store contract (same as the docs pipeline): one store root
     # per graph; the token guards damping/|V| config drift within it
-    token = f"d={damping!r};n={n}"
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    for i in range(1, iterations + 1):
-        if store is None:
-            ranks = step(ranks).localCheckpoint()
-        else:
-            ranks, _ = store.stage(
-                f"pagerank_iter_{i}", token, lambda r=ranks: step(r), resume
-            )
-    return ranks
+    return _pagerank_loop(
+        nodes.withColumn("rank", F.lit(1.0 / n)), iterations,
+        e, od, nodes, damping, F.col("rank") / F.col("od"),
+        F.lit((1.0 - damping) / n), F.col("dangling") / F.lit(float(n)),
+        store=store, token=f"d={damping!r};n={n}", resume=resume,
+    )
 
 
-def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Per-node triangle participation counts, (node, n_triangles).
-
-    The input is treated as an undirected simple graph (direction
-    dropped, self-loops and multi-edges removed).  Edges are oriented by
-    the total order (degree, node) ascending; a triangle {a,b,c} is then
-    found exactly once as oriented edges a->b, a->c, b->c.  Nodes in no
-    triangle are kept with n_triangles = 0.
-    """
-    und = (
+def _simple_graph(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """The undirected simple graph of ``edges`` as (u, v) rows, u < v:
+    direction dropped, self-loops and multi-edges removed."""
+    return (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("u"),
             F.greatest(F.col(src), F.col(dst)).alias("v"),
@@ -208,32 +244,40 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
         .where(F.col("u") != F.col("v"))
         .distinct()
     )
-    deg = (
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, deg) for every node of the simple graph ``und``."""
+    return (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
+
+
+def _arcs(und: DataFrame, a: str, b: str) -> DataFrame:
+    """Both orientations of every edge of ``und`` as (a, b) rows."""
+    return und.select(F.col("u").alias(a), F.col("v").alias(b)).unionByName(
+        und.select(F.col("v").alias(a), F.col("u").alias(b))
+    )
+
+
+def _triangles(und: DataFrame) -> DataFrame:
+    """(node, deg, n_triangles) for every node of the simple graph
+    ``und``, by the degree-ordered orientation of ``triangle_counts``."""
+    deg = _degrees(und)
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
+    u_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
     oriented = (
         und.join(du, "u")
         .join(dv, "v")
         .select(
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.col("u"),
-            )
-            .otherwise(F.col("v"))
-            .alias("a"),
-            F.when(
-                (F.col("du") < F.col("dv"))
-                | ((F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))),
-                F.col("v"),
-            )
-            .otherwise(F.col("u"))
-            .alias("b"),
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
         )
     )
     e1 = oriented.select(F.col("a"), F.col("b").alias("x"))
@@ -250,17 +294,39 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
         .groupBy("node")
         .agg(F.count("*").alias("n_triangles"))
     )
-    return (
-        deg.select("node")
-        .join(corners, "node", "left")
-        .select(
-            "node", F.coalesce("n_triangles", F.lit(0)).alias("n_triangles")
-        )
+    return deg.join(corners, "node", "left").select(
+        "node", "deg", F.coalesce("n_triangles", F.lit(0)).alias("n_triangles")
+    )
+
+
+def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Per-node triangle participation counts, (node, n_triangles).
+
+    The input is treated as an undirected simple graph (direction
+    dropped, self-loops and multi-edges removed).  Edges are oriented by
+    the total order (degree, node) ascending; a triangle {a,b,c} is then
+    found exactly once as oriented edges a->b, a->c, b->c.  Nodes in no
+    triangle are kept with n_triangles = 0.
+    """
+    return _triangles(_simple_graph(edges, src, dst)).select(
+        "node", "n_triangles"
     )
 
 
 class GraphStatsError(ValueError):
     pass
+
+
+def kcore_round(g: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """One k-core peel round over the simple graph ``g``, lazily:
+    (the degrees of ``g``, the edges of ``g`` whose endpoints both have
+    degree >= k)."""
+    deg = _degrees(g)
+    keep = deg.where(F.col("deg") >= k).select("node")
+    return deg, (
+        g.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
+        .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
+    )
 
 
 def kcore(edges: DataFrame, k: int, max_rounds: int = 12,
@@ -283,38 +349,15 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 12,
     sequences collapse geometrically.  The convergence probe is an edge
     count per round — a 1-long scalar, no data to the driver.
     """
-    g = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    g = _simple_graph(edges, src, dst).localCheckpoint()
     n_edges = g.count()
     for _ in range(max_rounds):
-        deg = (
-            g.select(F.col("u").alias("node"))
-            .unionByName(g.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
-        keep = deg.where(F.col("deg") >= k).select("node")
-        g2 = (
-            g.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .localCheckpoint()
-        )
+        deg, g2 = kcore_round(g, k)
+        g2 = g2.localCheckpoint()
         n2 = g2.count()
         if n2 == n_edges:
-            core_deg = (
-                g.select(F.col("u").alias("node"))
-                .unionByName(g.select(F.col("v").alias("node")))
-                .groupBy("node")
-                .agg(F.count("*").alias("core_deg"))
-            )
-            return core_deg.where(F.col("core_deg") >= k)
+            # converged: g is the core and deg its in-core degree (>= k)
+            return deg.withColumnRenamed("deg", "core_deg")
         g, n_edges = g2, n2
         if n_edges == 0:
             # empty core: preserve the caller's node type
@@ -357,17 +400,8 @@ def link_prediction_scores(
     deg(y) in the Jaccard denominator always use the *uncapped* degree.
     Centers in a wedge have deg ≥ 2, so ln(deg) > 0 — no zero division.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    adj = und.select(
-        F.col("u").alias("center"), F.col("v").alias("leaf")
-    ).unionByName(und.select(F.col("v").alias("center"), F.col("u").alias("leaf")))
+    und = _simple_graph(edges, src, dst)
+    adj = _arcs(und, "center", "leaf")
     deg = adj.groupBy("center").agg(F.count("*").alias("deg"))
     centers = deg if max_center_degree is None else deg.where(
         F.col("deg") <= max_center_degree
@@ -446,27 +480,13 @@ def void_stats(
 def clustering_coefficient(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Per-node local clustering coefficient over the undirected simple
     graph: c(v) = triangles(v) / C(deg(v), 2), 0 where deg < 2.
-    Composes ``triangle_counts`` (already degree-oriented) with the
-    degree table — one extra join, no new shuffle shapes.
+    Reads deg and the triangle counts off the one degree-oriented
+    enumeration ``triangle_counts`` runs — no new shuffle shapes.
     Returns (node, deg, n_triangles, clustering).
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    tri = triangle_counts(und, src="u", dst="v")
+    tri = _triangles(_simple_graph(edges, src, dst))
     pairs = (F.col("deg") * (F.col("deg") - 1) / 2.0)
-    return deg.join(tri, "node").select(
+    return tri.select(
         "node",
         "deg",
         "n_triangles",
@@ -483,21 +503,9 @@ def degree_assortativity(edges: DataFrame, src: str = "src", dst: str = "dst") -
     Pure aggregation — corr() is a single-pass combinable aggregate, so
     the whole statistic is one map-side-combining job at any scale.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    both = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    und = _simple_graph(edges, src, dst)
+    deg = _degrees(und)
+    both = _arcs(und, "u", "v")
     pairs = (
         both.join(deg.withColumnRenamed("node", "u"), "u")
         .withColumnRenamed("deg", "du")
@@ -571,64 +579,17 @@ def pagerank_weighted(
     the ranking primitive for co-occurrence/PMI-count graphs where edge
     multiplicity carries signal.  Weights must be positive.
 
-    Same in-plan discipline as ``pagerank``: one dst-keyed inflow
-    shuffle per iteration, 1-row dangling aggregate broadcast back,
-    per-round ``localCheckpoint``; the only driver scalar is |V|.
-    Returns (node, rank) unrounded.
+    The round and loop of ``pagerank`` with rank·w/W_u as the
+    contribution; the only driver scalar is |V|.  Returns (node, rank)
+    unrounded.
     """
-    e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight_col).cast("double").alias("w"),
-    ).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e, nodes, od = _pagerank_graph(edges, src, dst, weight_col)
     n = nodes.count()  # the one driver scalar: |V|
-    wsum = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.sum("w").alias("ws"))
-        .localCheckpoint()
+    return _pagerank_loop(
+        nodes.withColumn("rank", F.lit(1.0 / n)), iterations,
+        e, od, nodes, damping, F.col("rank") * F.col("w") / F.col("od"),
+        F.lit((1.0 - damping) / n), F.col("dangling") / F.lit(float(n)),
     )
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
-    for _ in range(iterations):
-        with_ws = ranks.join(wsum, "node", "left")
-        dangling = (
-            with_ws.where(F.col("ws").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
-        )
-        contribs = (
-            e.join(
-                with_ws.where(F.col("ws").isNotNull()).withColumnRenamed(
-                    "node", "src"
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("w") / F.col("ws")).alias("inflow"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.col("dangling") / F.lit(float(n))
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
 
 
 def personalized_pagerank(
@@ -649,20 +610,12 @@ def personalized_pagerank(
                                      + dangling_i·r(v))
 
     with r(v) = 1/|S| for seeds, 0 otherwise; dangling mass returns to
-    the seeds (the standard PPR teleport).  Same in-plan discipline as
-    ``pagerank``: the dangling term is a 1-row aggregate broadcast
-    back, ranks are ``localCheckpoint``-ed per round, and the only
-    driver scalar is |S| (one count).  Returns (node, rank) unrounded.
+    the seeds (the standard PPR teleport).  The round and loop of
+    ``pagerank`` with (1-d)·r and dangling·r as the restart and
+    teleport terms; the only driver scalar is |S| (one count).
+    Returns (node, rank) unrounded.
     """
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e, nodes, od = _pagerank_graph(edges, src, dst)
     seed_nodes = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
@@ -672,51 +625,41 @@ def personalized_pagerank(
     n_seeds = seed_nodes.count()  # the one driver scalar: |S|
     if n_seeds == 0:
         raise GraphStatsError("personalized_pagerank: empty seed set")
-    outdeg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").cast("double").alias("od"))
-        .localCheckpoint()
-    )
     # reset vector r(v): 1/|S| on seeds, 0 elsewhere — kept as a column
     # on the node table so every round reads it without a rejoin
     reset = nodes.join(
         seed_nodes.withColumn("_r", F.lit(1.0 / n_seeds)), "node", "left"
     ).select("node", F.coalesce("_r", F.lit(0.0)).alias("r")).localCheckpoint()
+    return _pagerank_loop(
+        reset.select("node", F.col("r").alias("rank")), iterations,
+        e, od, reset, damping, F.col("rank") / F.col("od"),
+        F.lit(1.0 - damping) * F.col("r"), F.col("dangling") * F.col("r"),
+    )
 
-    ranks = reset.select("node", F.col("r").alias("rank"))
-    for _ in range(iterations):
-        with_od = ranks.join(outdeg, "node", "left")
-        dangling = (
-            with_od.where(F.col("od").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
+
+def lpa_round(nbrs: DataFrame, labels: DataFrame) -> DataFrame:
+    """One synchronous label-propagation round, lazily: every node of
+    ``nbrs`` (node, nbr) takes the most frequent of its neighbors'
+    ``labels`` (node, label), ties broken by the smallest label."""
+    votes = (
+        nbrs.join(
+            labels.withColumnRenamed("node", "nbr"), "nbr"
         )
-        contribs = (
-            e.join(
-                with_od.where(F.col("od").isNotNull()).withColumnRenamed(
-                    "node", "src"
-                ),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("rank") / F.col("od")).alias("inflow"))
+        .groupBy("node", "label")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    # argmax by (cnt desc, label asc) as one aggregate: max over
+    # struct(cnt, -label) — labels are node ids (numeric), so the
+    # negation makes "max" pick the smallest label among ties
+    return (
+        votes.groupBy("node")
+        .agg(
+            F.max(
+                F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
+            ).alias("m")
         )
-        ranks = (
-            reset.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("r")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.col("dangling") * F.col("r")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
+        .select("node", (-F.col("m.neg")).alias("label"))
+    )
 
 
 def label_propagation(
@@ -724,7 +667,6 @@ def label_propagation(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Synchronous label-propagation community detection over the
     undirected view of ``edges``: every node starts as its own label;
@@ -736,14 +678,14 @@ def label_propagation(
     LPA may oscillate on bipartite structures, so the result is defined
     as "the labeling after ``rounds`` rounds", not a fixpoint claim).
 
-    Scale shape: per round one shuffle for the neighbor-label join
-    (on node id, high cardinality) and one for the (node, label) count
-    aggregate; the argmax is a single ``max(struct(cnt, -label))``
-    aggregate — no low-cardinality window anywhere.  Lineage is cut per
-    round with ``localCheckpoint`` like the PageRank loop
-    (``checkpoint=False`` keeps the plan declarative for plan audits).  Mirrors the
-    role of GraphX's LabelPropagation in a Spark deployment; reference
-    parity anchor: ABECTO groups correspondences by connected closure
+    Scale shape: per round (``lpa_round``) one shuffle for the
+    neighbor-label join (on node id, high cardinality) and one for the
+    (node, label) count aggregate; the argmax is a single
+    ``max(struct(cnt, -label))`` aggregate — no low-cardinality window
+    anywhere.  Lineage is cut per round with ``localCheckpoint`` like
+    the PageRank loop.  Mirrors the role of GraphX's LabelPropagation
+    in a Spark deployment; reference parity anchor: ABECTO groups
+    correspondences by connected closure
     (``processing/MappingProcessor.java``) — LPA is the denser-community
     refinement a KG pipeline runs on top of the materialized graph.
     """
@@ -751,44 +693,13 @@ def label_propagation(
         raise GraphStatsError("label_propagation needs rounds >= 1")
     # undirected, self-loop-free, deduplicated neighbor relation: each
     # edge contributes both directions exactly once
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("u"),
-            F.greatest(F.col(src), F.col(dst)).alias("v"),
-        )
-        .where(F.col("u") != F.col("v"))
-        .distinct()
+    nbrs = _arcs(_simple_graph(edges, src, dst), "node", "nbr").localCheckpoint()
+    labels = (
+        nbrs.select("node").distinct().withColumn("label", F.col("node"))
+        .localCheckpoint()
     )
-    nbrs = und.select(F.col("u").alias("node"), F.col("v").alias("nbr")).unionByName(
-        und.select(F.col("v").alias("node"), F.col("u").alias("nbr"))
-    )
-    if checkpoint:
-        nbrs = nbrs.localCheckpoint()
-    labels = nbrs.select("node").distinct().withColumn("label", F.col("node"))
-    if checkpoint:
-        labels = labels.localCheckpoint()
     for _ in range(rounds):
-        votes = (
-            nbrs.join(
-                labels.withColumnRenamed("node", "nbr"), "nbr"
-            )
-            .groupBy("node", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        # argmax by (cnt desc, label asc) as one aggregate: max over
-        # struct(cnt, -label) — labels are node ids (numeric), so the
-        # negation makes "max" pick the smallest label among ties
-        labels = (
-            votes.groupBy("node")
-            .agg(
-                F.max(
-                    F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))
-                ).alias("m")
-            )
-            .select("node", (-F.col("m.neg")).alias("label"))
-        )
-        if checkpoint:
-            labels = labels.localCheckpoint()
+        labels = lpa_round(nbrs, labels).localCheckpoint()
     return labels
 
 
@@ -983,9 +894,9 @@ def weighted_distances(
             .agg(F.min("dist").alias("dist"))
             .localCheckpoint(eager=True)
         )
-        unchanged = nxt.join(
-            dist, ["node", "dist"], "left_anti"
-        ).isEmpty() and nxt.count() == dist.count()
+        # one row per node on both sides and nxt keeps every node of
+        # dist, so no new (node, dist) pair means nxt == dist
+        unchanged = nxt.join(dist, ["node", "dist"], "left_anti").isEmpty()
         dist = nxt
         if unchanged:
             break

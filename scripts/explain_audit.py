@@ -482,41 +482,29 @@ def main() -> int:
         shutil.rmtree(tdir, ignore_errors=True)
 
     # ---- 8. graph analytics over the materialized KG (round 5) --------
+    # the PageRank, k-core and LPA loops checkpoint every round eagerly,
+    # hiding the plan, so each is audited on one lazy round of its own
+    # round function.
     # pagerank: the per-iteration update must be a hash-aggregated join
     # fan-in (partial aggregation on the dst key), never a cartesian;
     # the dangling 1-row aggregate must come back via a broadcast.
-    from abecto_spark.operators.graph_stats import triangle_counts
+    from abecto_spark.operators.graph_stats import (
+        _arcs,
+        _pagerank_graph,
+        _simple_graph,
+        kcore_round,
+        lpa_round,
+        pagerank_round,
+        triangle_counts,
+    )
 
     edges = q._part_edges(spark, SF_DIR).localCheckpoint()
-    # audit the update expression itself on a single unrolled step: rebuild
-    # iteration 1 lazily (pagerank() checkpoints eagerly, hiding the plan)
-    from pyspark.sql import functions as FF
-
-    nodes = (
-        edges.select(FF.col("src").alias("node"))
-        .unionByName(edges.select(FF.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = edges.groupBy(FF.col("src").alias("node")).agg(
-        FF.count("*").cast("double").alias("od")
-    )
-    ranks0 = nodes.withColumn("rank", FF.lit(1.0))
-    with_od = ranks0.join(outdeg, "node", "left")
-    dangling = with_od.where(FF.col("od").isNull()).agg(
-        FF.coalesce(FF.sum("rank"), FF.lit(0.0)).alias("dangling")
-    )
-    contribs = (
-        edges.join(
-            with_od.where(FF.col("od").isNotNull()).withColumnRenamed("node", "src"),
-            "src",
-        )
-        .groupBy(FF.col("dst").alias("node"))
-        .agg(FF.sum(FF.col("rank") / FF.col("od")).alias("inflow"))
-    )
-    step = (
-        nodes.join(contribs, "node", "left")
-        .crossJoin(FF.broadcast(dangling))
-        .select("node", (FF.coalesce("inflow", FF.lit(0.0)) + FF.col("dangling")).alias("rank"))
+    e, nodes, od = _pagerank_graph(edges, "src", "dst")
+    n = nodes.count()
+    step = pagerank_round(
+        nodes.withColumn("rank", F.lit(1.0 / n)), e, od, nodes, 0.85,
+        F.col("rank") / F.col("od"), F.lit(0.15 / n),
+        F.col("dangling") / F.lit(float(n)),
     )
     p = plan_of(step)
     sections.append(("kg_pagerank single update step (shuffle on dst, broadcast dangling)", p))
@@ -539,22 +527,9 @@ def main() -> int:
     check("link_prediction: no cartesian product", "CartesianProduct" not in p)
     check("link_prediction: map-side partial aggregation", "partial_count" in p)
 
-    # kcore: audit one peel round lazily (the operator checkpoints
-    # eagerly): degree agg must partially combine; keep-set joins must
-    # broadcast or hash, never nest-loop over data
-    und = edges.select(
-        FF.least("src", "dst").alias("u"), FF.greatest("src", "dst").alias("v")
-    ).where("u <> v").distinct()
-    kdeg = (
-        und.select(FF.col("u").alias("node"))
-        .unionByName(und.select(FF.col("v").alias("node")))
-        .groupBy("node")
-        .agg(FF.count("*").alias("deg"))
-    )
-    keep = kdeg.where(FF.col("deg") >= 15).select("node")
-    peel = und.join(
-        keep.withColumnRenamed("node", "u"), "u", "left_semi"
-    ).join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
+    # kcore: one peel round: degree agg must partially combine; keep-set
+    # joins must broadcast or hash, never nest-loop over data
+    _, peel = kcore_round(_simple_graph(edges), 15)
     p = plan_of(peel)
     sections.append(("kcore single peel round (partial agg + semi-joins)", p))
     check("kcore round: no cartesian product", "CartesianProduct" not in p)
@@ -603,14 +578,14 @@ def main() -> int:
     # bfs_distances: audit one lazily-rebuilt frontier step — the edge
     # probe must be a hash join on the source key and the settled-set
     # anti-join a hash/broadcast anti, never a nested loop
-    seeds0 = nodes.where(FF.col("node") % 97 == 0)
-    settled0 = seeds0.withColumn("dist", FF.lit(0).cast("long"))
+    seeds0 = nodes.where(F.col("node") % 97 == 0)
+    settled0 = seeds0.withColumn("dist", F.lit(0).cast("long"))
     bfs_step = (
         edges.join(seeds0.withColumnRenamed("node", "src"), "src")
-        .select(FF.col("dst").alias("node"))
+        .select(F.col("dst").alias("node"))
         .distinct()
         .join(settled0.select("node"), "node", "left_anti")
-        .withColumn("dist", FF.lit(1).cast("long"))
+        .withColumn("dist", F.lit(1).cast("long"))
     )
     p = plan_of(bfs_step)
     sections.append(("kg_bfs_distances single frontier step (hash join + anti-join)", p))
@@ -641,22 +616,15 @@ def main() -> int:
         anti[0] if anti else "no LeftAnti join",
     )
 
-    # personalized_pagerank: same update-step shape as pagerank plus the
-    # reset-vector multiply; the dangling 1-row aggregate must broadcast
+    # personalized_pagerank: the same round with the reset-vector
+    # restart and teleport; the dangling 1-row aggregate must broadcast
     rv = nodes.join(
-        seeds0.withColumn("_r", FF.lit(0.5)), "node", "left"
-    ).select("node", FF.coalesce("_r", FF.lit(0.0)).alias("r"))
-    ppr_step = (
-        rv.join(contribs, "node", "left")
-        .crossJoin(FF.broadcast(dangling))
-        .select(
-            "node",
-            (
-                FF.lit(0.15) * FF.col("r")
-                + FF.lit(0.85)
-                * (FF.coalesce("inflow", FF.lit(0.0)) + FF.col("dangling") * FF.col("r"))
-            ).alias("rank"),
-        )
+        seeds0.withColumn("_r", F.lit(0.5)), "node", "left"
+    ).select("node", F.coalesce("_r", F.lit(0.0)).alias("r"))
+    ppr_step = pagerank_round(
+        rv.select("node", F.col("r").alias("rank")), e, od, rv, 0.85,
+        F.col("rank") / F.col("od"), F.lit(0.15) * F.col("r"),
+        F.col("dangling") * F.col("r"),
     )
     p = plan_of(ppr_step)
     sections.append(("kg_ppr single update step (reset-vector multiply, broadcast dangling)", p))
@@ -696,21 +664,15 @@ def main() -> int:
     sections.append(("events_rollup (GROUP BY ROLLUP, partial aggregation)", p))
     check("events_rollup: map-side partial aggregation", "partial_count" in p)
 
-    # pagerank_weighted: one lazily-rebuilt update step — weighted inflow
-    # must partially aggregate on dst like the unweighted form
-    wsum = edges.withColumn("w", FF.lit(2.0)).groupBy(
-        FF.col("src").alias("node")
-    ).agg(FF.sum("w").alias("ws"))
-    wstep = (
-        edges.withColumn("w", FF.lit(2.0))
-        .join(
-            nodes.withColumn("rank", FF.lit(1.0))
-            .join(wsum, "node")
-            .withColumnRenamed("node", "src"),
-            "src",
-        )
-        .groupBy(FF.col("dst").alias("node"))
-        .agg(FF.sum(FF.col("rank") * FF.col("w") / FF.col("ws")).alias("inflow"))
+    # pagerank_weighted: the same round over the weighted edge table —
+    # weighted inflow must partially aggregate on dst like the unweighted
+    we, wnodes, wod = _pagerank_graph(
+        edges.withColumn("w", F.lit(2.0)), "src", "dst", "w"
+    )
+    wstep = pagerank_round(
+        wnodes.withColumn("rank", F.lit(1.0 / n)), we, wod, wnodes, 0.85,
+        F.col("rank") * F.col("w") / F.col("od"), F.lit(0.15 / n),
+        F.col("dangling") / F.lit(float(n)),
     )
     p = plan_of(wstep)
     sections.append(("kg_wpr single update step (weighted inflow on dst)", p))
@@ -750,11 +712,9 @@ def main() -> int:
     # label_propagation: the per-round argmax must be a plain aggregate
     # (max over struct) — no window keyed on anything low-cardinality —
     # and the vote counts must combine map-side
-    from abecto_spark.operators.graph_stats import label_propagation
-    from abecto_spark.plans.entry_queries import _part_edges
-
-    lpa = label_propagation(
-        _part_edges(spark, SF_DIR), rounds=1, checkpoint=False
+    nbrs = _arcs(_simple_graph(edges), "node", "nbr")
+    lpa = lpa_round(
+        nbrs, nbrs.select("node").distinct().withColumn("label", F.col("node"))
     )
     p = plan_of(lpa)
     sections.append(("label_propagation single round (vote agg + struct argmax)", p))

@@ -331,6 +331,24 @@ def test_personalized_pagerank_matches_numpy(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
 
 
+def test_personalized_pagerank_all_seeds_equals_pagerank(spark):
+    from abecto_spark.operators.graph_stats import (
+        pagerank,
+        personalized_pagerank,
+    )
+
+    # with every node a seed, r(v) = 1/N: the restart (1-d)·r and the
+    # teleport dangling·r reduce to pagerank's (1-d)/N and dangling/N
+    e = _edges(spark, [(1, 2), (1, 3), (2, 3), (3, 1), (3, 4), (5, 4)])
+    seeds = spark.createDataFrame([(n,) for n in range(1, 6)], "node bigint")
+    pr = {r["node"]: r["rank"] for r in pagerank(e, iterations=5).collect()}
+    ppr = {r["node"]: r["rank"]
+           for r in personalized_pagerank(e, seeds, iterations=5).collect()}
+    assert set(ppr) == set(pr) == {1, 2, 3, 4, 5}
+    for n in pr:
+        assert ppr[n] == pytest.approx(pr[n], abs=1e-12)
+
+
 def test_personalized_pagerank_empty_seeds_is_loud(spark):
     from abecto_spark.operators.graph_stats import (
         GraphStatsError,
