@@ -11,9 +11,10 @@ Pipeline per variable and unordered dataset pair:
      characters (``s[0:2], s[1:3], s[2:4]``) — any single edit in the
      prefix still shares a gram, recall measured in tests; ``block="cross"``
      gives the exact cartesian for golden verification.
-  3. scoring: per-bucket quadratic join + JW executed inside DuckDB (C++)
-     via applyInPandas — candidates never leave the task; oversized
-     buckets are salted into a triangle join (see _score_buckets_duckdb).
+  3. scoring: the keyed strings are hash-partitioned by bucket and each
+     task scores all its buckets in ONE DuckDB (C++) self-join + JW query
+     via mapInArrow — candidates never leave the task; oversized buckets
+     are salted into a triangle join (see _score_buckets_duckdb).
      Exact-semantics fallback: Arrow-batched vectorized numpy JW
      (functions/jw.py) over materialized candidate pairs.
   4. per-direction argmax with **ties kept** (`maxValue`,
@@ -62,6 +63,11 @@ def _score_buckets_duckdb(
     pair stream never leaves the engine. Pairs found via several shared
     grams are deduped downstream (output is post-threshold, tiny).
 
+    The strings are hash-partitioned on the bucket key, so a bucket never
+    splits across tasks, and each task runs one connection and one
+    self-join keyed on the bucket for all of its buckets: the Python and
+    DuckDB setup (~18 ms) is paid per task, not per bucket.
+
     Skew: a bucket of n strings is n² pairs of work in ONE task; hot
     prefixes (common name stems, CJK bigrams) grow with the value
     universe. Buckets over ``bucket_cap`` rows are *salted into a
@@ -96,64 +102,56 @@ def _score_buckets_duckdb(
         )
     )
 
-    def score(pdf):
+    def score(batches):
         import duckdb
-        import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         from ..functions.jw import jaro_winkler_batch
 
-        empty = pd.DataFrame(
-            {c: pd.Series(dtype="float64" if c == "score" else "object")
-             for c in ("d1", "variable", "v1", "d2", "v2", "score")}
-        )
-        same = bool(pdf["_ti"].iat[0] == pdf["_tj"].iat[0])
-        cross = "" if same else "AND a._s <> b._s"
-        # DuckDB's JW walks UTF-8 bytes; pairs touching a non-ASCII string
-        # are joined/length-pruned in DuckDB but scored by the exact
-        # codepoint kernel
-        pdf = pdf.assign(_ascii=~pdf["value"].str.contains(r"[^\x00-\x7f]", regex=True))
-        join_cond = f"""
-              FROM t a JOIN t b
-                ON a.dataset < b.dataset {cross}
-               AND least(length(a.value), length(b.value))
-                   >= ? * greatest(length(a.value), length(b.value))
-        """
-        con = duckdb.connect()
-        con.execute("SET threads=1")
-        con.register("t", pdf)
-        out = con.execute(
-            f"""
-            SELECT d1, variable, v1, d2, v2, score FROM (
-              SELECT a.dataset AS d1, a.variable AS variable, a.value AS v1,
-                     b.dataset AS d2, b.value AS v2,
-                     CASE WHEN a.value = b.value THEN 1.0
-                          ELSE jaro_winkler_similarity(a.value, b.value)
-                     END AS score
-              {join_cond} AND a._ascii AND b._ascii
-            ) WHERE score >= ?
-            """,
-            [r_min, threshold],
-        ).df()
-        if not pdf["_ascii"].all():
-            cand = con.execute(
-                f"""
-                SELECT a.dataset AS d1, a.variable AS variable, a.value AS v1,
-                       b.dataset AS d2, b.value AS v2
-                {join_cond} AND NOT (a._ascii AND b._ascii)
+        batches = list(batches)
+        if not batches:
+            return
+        with duckdb.connect(config={"threads": 1}) as con:
+            con.register("t", pa.Table.from_batches(batches))
+            # one hash self-join over every bucket of the task; a salted cross
+            # task (ti < tj) keeps only the pairs across its two salt groups.
+            # DuckDB's JW walks UTF-8 bytes, so a pair touching a non-ASCII
+            # string (byte length != char length) leaves with a NULL score and
+            # is scored by the exact codepoint kernel below
+            out = con.execute(
+                """
+                WITH u AS (SELECT *, strlen(value) = length(value) AS _ascii FROM t)
+                SELECT * FROM (
+                  SELECT a.dataset AS d1, a.variable AS variable, a.value AS v1,
+                         b.dataset AS d2, b.value AS v2,
+                         CASE WHEN a.value = b.value THEN 1.0::DOUBLE
+                              WHEN a._ascii AND b._ascii
+                              THEN jaro_winkler_similarity(a.value, b.value)
+                         END AS score
+                  FROM u a JOIN u b
+                    ON a.variable = b.variable AND a.bk = b.bk
+                   AND a._ti = b._ti AND a._tj = b._tj
+                   AND a.dataset < b.dataset AND (a._ti = a._tj OR a._s <> b._s)
+                   AND least(length(a.value), length(b.value))
+                       >= ? * greatest(length(a.value), length(b.value))
+                ) WHERE score IS NULL OR score >= ?
                 """,
-                [r_min],
-            ).df()
-            if len(cand):
-                s = jaro_winkler_batch(cand["v1"], cand["v2"])
-                cand = cand.assign(score=s)[np.asarray(s) >= threshold]
-                out = pd.concat([out, cand], ignore_index=True)
-        con.close()
-        return out if len(out) else empty
+                [r_min, threshold],
+            ).arrow()
+        exact = out["score"].is_null()
+        if pc.any(exact).as_py():
+            cand = out.filter(exact)
+            s = jaro_winkler_batch(cand["v1"].to_pandas(), cand["v2"].to_pandas())
+            cand = cand.set_column(5, "score", pa.array(s)).filter(pa.array(s >= threshold))
+            out = pa.concat_tables([out.filter(pc.invert(exact)), cand])
+        yield from out.cast(pa.schema(
+            [(c, pa.float64() if c == "score" else pa.string()) for c in out.column_names]
+        )).to_batches()
 
     return (
-        exploded.groupBy("variable", "bk", "_ti", "_tj")
-        .applyInPandas(score, _SCORED_SCHEMA)
+        exploded.repartition("variable", "bk", "_ti", "_tj")
+        .mapInArrow(score, _SCORED_SCHEMA)
         .dropDuplicates(["d1", "d2", "variable", "v1", "v2"])
     )
 

@@ -72,6 +72,12 @@ def _tuned(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # compiled whole-stage classes are cached per plan shape in an LRU
+        # of 100 by default; one pipeline build or graph-loop pass compiles
+        # 160-270 classes, so every class was evicted before its reuse and
+        # each repeat paid janino plus a fresh JIT of the new class. Static
+        # conf: only takes effect when the session is built here.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if local:
         # test/bench harness knobs; a cluster submitter owns these

@@ -71,13 +71,31 @@ def main() -> int:
     check("functional_mapping: no cartesian product", "CartesianProduct" not in p)
 
     # ---- 3. JW linking: blocked join (no full cross product) ----------
-    jw = q.q_jw_linking(spark, SF_DIR)
+    # the scored pairs are localCheckpoint-ed eagerly, so the final plan
+    # starts at a scan of the checkpoint; keep the scorer's own plan too
+    frame = type(spark.range(0))
+    checkpointed = []
+    local_checkpoint = frame.localCheckpoint
+
+    def capture(df, *args, **kwargs):
+        checkpointed.append(plan_of(df))
+        return local_checkpoint(df, *args, **kwargs)
+
+    frame.localCheckpoint = capture
+    try:
+        jw = q.q_jw_linking(spark, SF_DIR)
+    finally:
+        frame.localCheckpoint = local_checkpoint
     p = plan_of(jw)
     sections.append(("jw_linking (blocked similarity join)", p))
     check("jw_linking: candidate join is hash/merge (blocked), not BNLJ/cartesian",
           "CartesianProduct" not in p)
     check("jw_linking: Arrow-batched scorer (no row-at-a-time PythonUDF)",
           "ArrowEvalPython" in p or "BatchEvalPython" not in p)
+    sp = "\n".join(checkpointed)
+    sections.append(("jw_linking bucket scorer (plan before the checkpoint)", sp))
+    check("jw_linking: bucket scorer is MapInArrow (no FlatMapGroupsInPandas)",
+          "MapInArrow" in sp and "FlatMapGroupsInPandas" not in sp)
 
     # ---- 4. dedup: exchange reuse / partial aggregation ---------------
     dd = q.q_exact_dedup(spark, SF_DIR)

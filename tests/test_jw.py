@@ -9,9 +9,15 @@ import random
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from abecto_spark.functions.jw import jaro_winkler_batch, jaro_winkler_ref
-from abecto_spark.operators.jw_mapping import jw_mapping
+from abecto_spark.functions.jw import jw_score
+from abecto_spark.operators.jw_mapping import (
+    _block_keys,
+    _score_buckets_duckdb,
+    jw_mapping,
+)
 from abecto_spark.operators.closure import connected_components
 
 from tests.conftest import rows_set
@@ -159,3 +165,41 @@ def test_unicode_linking_matches_reference_kernel(spark):
     }
     assert got_grams == expect
     assert got_cross == expect
+
+
+def test_salted_triangle_scoring_matches_unsalted_and_cross(spark):
+    """Every string shares the "ab" bucket, so a small ``bucket_cap`` salts
+    it into a triangle of tasks; each pair must be scored exactly once
+    whichever salt group its d1 and its d2 string fell into."""
+    random.seed(29)
+    rows = []
+    for i in range(20):
+        name = "ab" + "".join(random.choices("cdefghij", k=6))
+        noisy = list(name)
+        noisy[random.randrange(2, len(noisy))] = random.choice("klmn")
+        rows += [("d1", name), ("d2", "".join(noisy))]
+    rows += [("d1", "abgarçon"), ("d2", "abgarcon")]
+    strings = spark.createDataFrame(rows, "dataset string, value string").select(
+        "dataset", F.lit("label").alias("variable"), "value"
+    )
+    keyed = strings.select("*", F.explode(_block_keys(F.col("value"))).alias("bk"))
+    threshold, r_min, cap = 0.90, 0.5, 8
+    k = -(-len(rows) // cap)
+    salts = {r[0] for r in strings.select(F.pmod(F.xxhash64("value"), F.lit(k))).collect()}
+    assert len(salts) >= 3
+
+    def scored(df):
+        return {(r.d1, r.v1, r.d2, r.v2, round(r.score, 9)) for r in df.collect()}
+
+    salted = scored(_score_buckets_duckdb(keyed, threshold, r_min, bucket_cap=cap))
+    unsalted = scored(_score_buckets_duckdb(keyed, threshold, r_min))
+    s1 = strings.select(F.col("dataset").alias("d1"), "variable", F.col("value").alias("v1"))
+    s2 = strings.select(F.col("dataset").alias("d2"), "variable", F.col("value").alias("v2"))
+    cross = scored(
+        s1.join(s2, "variable").where(F.col("d1") < F.col("d2"))
+        .withColumn("score", jw_score(F.col("v1"), F.col("v2"), threshold))
+        .where(F.col("score") >= threshold)
+    )
+    assert ("d1", "abgarçon", "d2", "abgarcon") in {r[:4] for r in cross}
+    assert len(cross) >= 20
+    assert salted == unsalted == cross
