@@ -4,6 +4,10 @@ Replaces the reference's trie-based matcher (external lib
 ``similarity.jarowinkler``, used by `JaroWinklerMappingProcessor.java:81-88`)
 with a numpy implementation that scores a whole Arrow batch of candidate
 string pairs at once — no per-row Python in the hot loop (the north rule).
+The one caller is the JW linking scorer
+(``operators/jw_mapping._score_buckets_duckdb``): DuckDB's C++ JW scores
+what it provably agrees on (ASCII pairs at thresholds above 0.82), and
+this kernel scores every other candidate pair.
 
 Semantics: classic Jaro similarity (match window ``max(|a|,|b|)/2 - 1``,
 first-free-match marking, transposition count) plus the Winkler prefix
@@ -20,7 +24,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 WINKLER_P = 0.1
 WINKLER_MAX_PREFIX = 4
@@ -140,74 +143,3 @@ def jaro_winkler_batch(s1: pd.Series, s2: pd.Series) -> np.ndarray:
     eq_all = (l1 == l2) & ((a == b) | (pos >= l1[:, None])).all(axis=1)
     jw = np.where(eq_all, 1.0, jw)
     return jw
-
-
-_duck_con = None
-
-
-def _duckdb_jw_batch(s1: pd.Series, s2: pd.Series) -> np.ndarray:
-    """C++-speed JW via DuckDB's jaro_winkler_similarity, one cached
-    connection per python worker, single-threaded (Spark owns parallelism).
-
-    DuckDB applies the Winkler boost only when jaro > 0.7 (the classic
-    boost threshold) while the reference applies it unconditionally. With
-    unconditional boost, jw <= 0.82 whenever jaro <= 0.7, so for every
-    pair scoring strictly above 0.82 the two definitions coincide exactly
-    — callers gate this path on threshold > 0.82 (see jw_score).
-    """
-    global _duck_con
-    import duckdb
-
-    if _duck_con is None:
-        _duck_con = duckdb.connect()
-        _duck_con.execute("SET threads=1")
-    a = s1.fillna("")
-    b = s2.fillna("")
-    batch = pd.DataFrame({"a": a, "b": b})
-    out = _duck_con.execute(
-        "SELECT jaro_winkler_similarity(a, b) AS s FROM batch"
-    ).fetchnumpy()["s"]
-    # DuckDB's JW walks UTF-8 *bytes*; multibyte codepoints shift lengths
-    # and match windows, so any pair touching non-ASCII goes through the
-    # exact codepoint kernel instead
-    non_ascii = (
-        a.str.contains(r"[^\x00-\x7f]", regex=True).to_numpy()
-        | b.str.contains(r"[^\x00-\x7f]", regex=True).to_numpy()
-    )
-    if non_ascii.any():
-        out = out.copy()
-        out[non_ascii] = jaro_winkler_batch(
-            a[non_ascii].reset_index(drop=True), b[non_ascii].reset_index(drop=True)
-        )
-    # empty-vs-empty and exact equality pinned to the reference (1.0)
-    return np.where(a.to_numpy() == b.to_numpy(), 1.0, out)
-
-
-_jw_udfs: dict = {}
-
-
-def jw_score(a, b, threshold: float | None = None):
-    """Column: Jaro-Winkler score of two string columns (Arrow-batched).
-
-    ``threshold``: when the caller will discard scores at or below 0.82,
-    the DuckDB C++ scorer is provably identical on all surviving pairs and
-    ~40x faster than the numpy kernel; otherwise the exact numpy batch
-    runs. The gate is strict (> 0.82) because at exactly 0.82 a pair with
-    jaro exactly at DuckDB's 0.7 boost cutoff and a 4-char common prefix
-    is kept by the reference's unconditional boost but dropped by DuckDB.
-    The pandas UDF is created lazily because pyspark 4 needs an active
-    SparkSession to resolve the return type.
-    """
-    use_duck = threshold is not None and threshold > 0.82
-    if use_duck:
-        try:
-            import duckdb  # noqa: F401
-        except ImportError:
-            use_duck = False
-    key = "duck" if use_duck else "numpy"
-    if key not in _jw_udfs:
-        fn = _duckdb_jw_batch if use_duck else jaro_winkler_batch
-        _jw_udfs[key] = F.pandas_udf(
-            lambda s1, s2, _fn=fn: pd.Series(_fn(s1, s2)), "double"
-        )
-    return _jw_udfs[key](a, b)

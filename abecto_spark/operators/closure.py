@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .rules import FixpointNotConverged
+
 
 def _bidirect(edges: DataFrame) -> DataFrame:
     return edges.select("src", "dst").union(
@@ -55,6 +57,10 @@ def connected_components(
     default 2M caps driver usage at a few hundred MB). The intended
     caller regime is *value-level* graphs (canonical_from_value_links),
     which are orders of magnitude smaller than resource graphs.
+
+    The distributed rounds raise ``rules.FixpointNotConverged`` if labels
+    still change in round ``max_iterations`` (a component of diameter
+    above ``max_iterations``) instead of returning partial labels.
     """
     if small_threshold is None:
         import os
@@ -139,6 +145,10 @@ def connected_components(
         labels = agg.select("node", "label")
         if changed == 0:
             break
+    else:
+        raise FixpointNotConverged(
+            f"connected components did not converge in {max_iterations} rounds"
+        )
 
     return labels.select(
         F.col("node").alias("resource"), F.col("label").alias("canonical_id")

@@ -150,11 +150,10 @@ def pagerank_round(
     )
 
 
-def _pagerank_graph(edges: DataFrame, src: str, dst: str, weight=None):
-    """(e, nodes, od) for ``pagerank_round``: the edge table, its node
-    set and the per-source out-degree (or, with ``weight``, the summed
-    out-weight ``od``).  Every round reads all three, so each is
-    materialized once; the unweighted edge table carries no ``w``."""
+def _edge_graph(edges: DataFrame, src: str, dst: str, weight=None):
+    """(e, nodes): the checkpointed (src, dst[, w]) edge table and its
+    checkpointed node set, read by every round of an iterative scorer;
+    the edge table carries ``w`` only when ``weight`` is given."""
     cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
     if weight is not None:
         cols.append(F.col(weight).cast("double").alias("w"))
@@ -165,6 +164,14 @@ def _pagerank_graph(edges: DataFrame, src: str, dst: str, weight=None):
         .distinct()
         .localCheckpoint()
     )
+    return e, nodes
+
+
+def _pagerank_graph(edges: DataFrame, src: str, dst: str, weight=None):
+    """(e, nodes, od) for ``pagerank_round``: ``_edge_graph`` plus the
+    per-source out-degree (or, with ``weight``, the summed out-weight
+    ``od``), materialized once because every round reads it."""
+    e, nodes = _edge_graph(edges, src, dst, weight)
     out = F.count("*").cast("double") if weight is None else F.sum("w")
     od = (
         e.groupBy(F.col("src").alias("node"))
@@ -731,15 +738,7 @@ def hits(
     """
     if iterations < 1:
         raise GraphStatsError("hits needs iterations >= 1")
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e, nodes = _edge_graph(edges, src, dst)
     hubs = nodes.withColumn("hub", F.lit(1.0))
     auths = None
     for _ in range(iterations):

@@ -11,12 +11,14 @@ Pipeline per variable and unordered dataset pair:
      characters (``s[0:2], s[1:3], s[2:4]``) — any single edit in the
      prefix still shares a gram, recall measured in tests; ``block="cross"``
      gives the exact cartesian for golden verification.
-  3. scoring: the keyed strings are hash-partitioned by bucket and each
-     task scores all its buckets in ONE DuckDB (C++) self-join + JW query
-     via mapInArrow — candidates never leave the task; oversized buckets
-     are salted into a triangle join (see _score_buckets_duckdb).
-     Exact-semantics fallback: Arrow-batched vectorized numpy JW
-     (functions/jw.py) over materialized candidate pairs.
+  3. scoring, one path for both block modes and every threshold: the
+     keyed strings are hash-partitioned by bucket and each task scores
+     all its buckets in ONE DuckDB (C++) self-join + JW query via
+     mapInArrow — candidates never leave the task; oversized buckets are
+     salted into a triangle join (see _score_buckets_duckdb). Pairs whose
+     DuckDB score could differ from the reference's (thresholds <= 0.82,
+     non-ASCII strings) leave the query unscored and go through the
+     exact vectorized numpy kernel (functions/jw.py) in the same task.
   4. per-direction argmax with **ties kept** (`maxValue`,
      `JaroWinklerMappingProcessor.java:112-127`): ``rank() == 1`` over a
      window — rank, not row_number.
@@ -31,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.jw import jw_score
+from .salting import salted_triangle
 
 SYNTHETIC_PREFIX = "\x00jw:"  # sorts before any real resource id
 
@@ -40,28 +42,16 @@ _SCORED_SCHEMA = (
 )
 
 
-def _duckdb_ok(threshold: float) -> bool:
-    # DuckDB's boost-threshold JW coincides with the reference's
-    # unconditional-boost JW on every pair scoring > 0.82 (functions/jw.py);
-    # at exactly 0.82 the identity has an open boundary (jaro exactly 0.7
-    # with a 4-char common prefix), so the gate is strict
-    if threshold <= 0.82:
-        return False
-    try:
-        import duckdb  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def _score_buckets_duckdb(
     keyed: DataFrame, threshold: float, r_min: float, bucket_cap: int = 4000
 ) -> DataFrame:
     """Quadratic scoring inside each blocking bucket, executed by DuckDB
-    (C++) within the task — Arrow traffic is O(strings), the candidate
-    pair stream never leaves the engine. Pairs found via several shared
-    grams are deduped downstream (output is post-threshold, tiny).
+    (C++) within the task — Arrow traffic into the task is O(strings),
+    and the candidate pair stream never leaves it: DuckDB's result is
+    read in 10k-row batches, the unscored pairs among them go through
+    ``jaro_winkler_batch``, and only pairs at or above ``threshold`` are
+    yielded. Pairs found via several shared grams are deduped downstream
+    (output is post-threshold, tiny).
 
     The strings are hash-partitioned on the bucket key, so a bucket never
     splits across tasks, and each task runs one connection and one
@@ -69,37 +59,18 @@ def _score_buckets_duckdb(
     DuckDB setup (~18 ms) is paid per task, not per bucket.
 
     Skew: a bucket of n strings is n² pairs of work in ONE task; hot
-    prefixes (common name stems, CJK bigrams) grow with the value
-    universe. Buckets over ``bucket_cap`` rows are *salted into a
-    triangle join*: rows get salt s ∈ [0, k), k = ceil(n/cap), and task
-    (i, j≥i) scores exactly the cross pairs of salt groups i and j — every
-    pair covered once, per-task work ≤ cap², replication factor k on the
-    (tiny) string rows instead of a single k²·cap²-pair straggler."""
+    prefixes (common name stems, CJK bigrams) and ``block="cross"``'s one
+    bucket per variable grow with the value universe. Buckets over
+    ``bucket_cap`` rows are *salted into a triangle join*
+    (``salting.salted_triangle``): task (i, j≥i) scores exactly the cross
+    pairs of salt groups i and j, so every pair is covered once and no
+    task scores more than about cap² pairs, for a replication factor k on
+    the (tiny) string rows."""
 
     cnt = keyed.groupBy("variable", "bk").agg(F.count("*").alias("_n"))
-    k = F.greatest(F.ceil(F.col("_n") / bucket_cap), F.lit(1)).cast("int")
-    salted = (
-        keyed.join(F.broadcast(cnt), ["variable", "bk"])
-        .withColumn("_k", k)
-        .withColumn("_s", F.pmod(F.xxhash64("value"), F.col("_k")).cast("int"))
-    )
-    # row with salt s participates in tasks (i, s) for i<=s and (s, j) for j>s
-    tasks = F.expr(
-        """
-        concat(
-          transform(sequence(0, _s), i -> struct(i AS ti, _s AS tj)),
-          CASE WHEN _s < _k - 1
-               THEN transform(sequence(_s + 1, _k - 1), j -> struct(_s AS ti, j AS tj))
-               ELSE array() END
-        )
-        """
-    )
-    exploded = (
-        salted.withColumn("_t", F.explode(tasks))
-        .select(
-            "dataset", "variable", "value", "bk", "_s",
-            F.col("_t.ti").alias("_ti"), F.col("_t.tj").alias("_tj"),
-        )
+    exploded = salted_triangle(
+        keyed.join(F.broadcast(cnt), ["variable", "bk"]), bucket_cap, "value",
+        ["dataset", "variable", "value", "bk"],
     )
 
     def score(batches):
@@ -116,17 +87,21 @@ def _score_buckets_duckdb(
             con.register("t", pa.Table.from_batches(batches))
             # one hash self-join over every bucket of the task; a salted cross
             # task (ti < tj) keeps only the pairs across its two salt groups.
-            # DuckDB's JW walks UTF-8 bytes, so a pair touching a non-ASCII
-            # string (byte length != char length) leaves with a NULL score and
-            # is scored by the exact codepoint kernel below
-            out = con.execute(
+            # DuckDB boosts only when jaro > 0.7, the reference always: the
+            # two agree on every pair scoring strictly above 0.82 (at jaro
+            # <= 0.7 the boosted score is <= 0.82), so at thresholds <= 0.82
+            # ($boost false) every unequal pair leaves with a NULL score and
+            # is scored by the exact codepoint kernel below. So is a pair
+            # touching a non-ASCII string (byte length != char length):
+            # DuckDB's JW walks UTF-8 bytes
+            reader = con.execute(
                 """
                 WITH u AS (SELECT *, strlen(value) = length(value) AS _ascii FROM t)
                 SELECT * FROM (
                   SELECT a.dataset AS d1, a.variable AS variable, a.value AS v1,
                          b.dataset AS d2, b.value AS v2,
                          CASE WHEN a.value = b.value THEN 1.0::DOUBLE
-                              WHEN a._ascii AND b._ascii
+                              WHEN $boost AND a._ascii AND b._ascii
                               THEN jaro_winkler_similarity(a.value, b.value)
                          END AS score
                   FROM u a JOIN u b
@@ -134,20 +109,24 @@ def _score_buckets_duckdb(
                    AND a._ti = b._ti AND a._tj = b._tj
                    AND a.dataset < b.dataset AND (a._ti = a._tj OR a._s <> b._s)
                    AND least(length(a.value), length(b.value))
-                       >= ? * greatest(length(a.value), length(b.value))
-                ) WHERE score IS NULL OR score >= ?
+                       >= $r_min * greatest(length(a.value), length(b.value))
+                ) WHERE score IS NULL OR score >= $threshold
                 """,
-                [r_min, threshold],
-            ).arrow()
-        exact = out["score"].is_null()
-        if pc.any(exact).as_py():
-            cand = out.filter(exact)
-            s = jaro_winkler_batch(cand["v1"].to_pandas(), cand["v2"].to_pandas())
-            cand = cand.set_column(5, "score", pa.array(s)).filter(pa.array(s >= threshold))
-            out = pa.concat_tables([out.filter(pc.invert(exact)), cand])
-        yield from out.cast(pa.schema(
-            [(c, pa.float64() if c == "score" else pa.string()) for c in out.column_names]
-        )).to_batches()
+                {"boost": bool(threshold > 0.82), "r_min": r_min, "threshold": threshold},
+            ).fetch_record_batch(10_000)
+            schema = pa.schema([
+                (c, pa.float64() if c == "score" else pa.string())
+                for c in reader.schema.names
+            ])
+            for batch in reader:
+                out = pa.Table.from_batches([batch])
+                exact = out["score"].is_null()
+                if pc.any(exact).as_py():
+                    cand = out.filter(exact)
+                    s = jaro_winkler_batch(cand["v1"].to_pandas(), cand["v2"].to_pandas())
+                    cand = cand.set_column(5, "score", pa.array(s)).filter(pa.array(s >= threshold))
+                    out = pa.concat_tables([out.filter(pc.invert(exact)), cand])
+                yield from out.cast(schema).to_batches()
 
     return (
         exploded.repartition("variable", "bk", "_ti", "_tj")
@@ -196,65 +175,19 @@ def jw_mapping(
     idx = value_index(values, variables, case_sensitive)
 
     strings = idx.select("dataset", "variable", "value").distinct()
-
-    if block == "cross":
-        s1 = strings.select(
-            F.col("dataset").alias("d1"), "variable", F.col("value").alias("v1")
-        )
-        s2 = strings.select(
-            F.col("dataset").alias("d2"), "variable", F.col("value").alias("v2")
-        )
-        cand = s1.join(s2, "variable").where(F.col("d1") < F.col("d2"))
-    else:
-        cand = None
-        keyed = strings.select(
-            "dataset",
-            "variable",
-            "value",
-            F.explode(_block_keys(F.col("value"))).alias("bk"),
-        )
+    # "cross" is one bucket per variable: the exact cartesian, salted by
+    # the scorer's bucket cap like any hot gram bucket
+    bk = F.lit("") if block == "cross" else F.explode(_block_keys(F.col("value")))
+    keyed = strings.select("dataset", "variable", "value", bk.alias("bk"))
 
     # Provable length-ratio prune: with prefix boost capped at 4·0.1,
     # jw >= t implies jaro >= (t-0.4)/0.6, and jaro <= (2 + min/max)/3,
     # so min_len/max_len >= 3·(t-0.4)/0.6 - 2. Same role as the
     # reference trie's length bound.
     r_min = max(3.0 * (threshold - 0.4) / 0.6 - 2.0, 0.0)
-
-    if cand is None and _duckdb_ok(threshold):
-        # scale path: quadratic candidate stream never leaves the task
-        scored = _score_buckets_duckdb(keyed, threshold, r_min)
-    else:
-        if cand is None:
-            s1 = keyed.select(
-                F.col("dataset").alias("d1"), "variable",
-                F.col("value").alias("v1"), "bk",
-            )
-            s2 = keyed.select(
-                F.col("dataset").alias("d2"), "variable",
-                F.col("value").alias("v2"), "bk",
-            )
-            # NO distinct: pairs share >1 gram rarely (~6%), and deduping
-            # the candidate set is the biggest shuffle of the pipeline —
-            # dedup the tiny thresholded output instead
-            cand = (
-                s1.join(s2, ["variable", "bk"])
-                .where(F.col("d1") < F.col("d2"))
-                .drop("bk")
-            )
-        if r_min > 0:
-            llo = F.least(F.length("v1"), F.length("v2"))
-            lhi = F.greatest(F.length("v1"), F.length("v2"))
-            cand = cand.where(llo.cast("double") >= lhi * F.lit(r_min))
-        # scoring runs on the join output partitions; the session pins
-        # AQE's coalescing floor low so the tiny blocking-key shuffle
-        # keeps cluster-width parallelism for this quadratic-output stage
-        scored = (
-            cand.withColumn("score", jw_score(F.col("v1"), F.col("v2"), threshold))
-            .where(F.col("score") >= F.lit(threshold))
-            .dropDuplicates(["d1", "d2", "variable", "v1", "v2"])
-        )
+    scored = _score_buckets_duckdb(keyed, threshold, r_min)
     # the scored subtree feeds both argmax directions and (via bidi) two
-    # resource fan-out joins — materialize once so the UDF scan runs once,
+    # resource fan-out joins — materialize once so the scorer runs once,
     # not up to four times (exchange reuse is unreliable under AQE, and a
     # lazy checkpoint shared by branches of a single job races its cache)
     scored = scored.localCheckpoint(eager=True)

@@ -48,6 +48,7 @@ from ..model import (
     M_REL_COVEREDNESS,
     MEASURES_SCHEMA,
 )
+from .salting import salted_triangle
 
 _SCALE = Decimal("1E-16")
 
@@ -248,8 +249,8 @@ def _group_pairs(gmem: DataFrame, pair_cap: int) -> DataFrame:
     join columns), paying just one aggregate + a broadcast anti-join to
     split the two populations. Oversized-group members get salt
     s = hash(resource) mod k with k = ceil(n / pair_cap) and are
-    replicated to pair-tasks (i, s) for i ≤ s and (s, j) for j > s (same
-    construction as jw_mapping._score_buckets_duckdb). Joining on
+    replicated to pair-tasks (i, s) for i ≤ s and (s, j) for j > s
+    (``salting.salted_triangle``, shared with the JW scorer). Joining on
     (group, ti, tj) and keeping same-salt pairs only on the diagonal
     yields every unordered pair exactly once per role order, with
     per-task join work bounded by ~(2·pair_cap)² instead of n²."""
@@ -275,25 +276,9 @@ def _group_pairs(gmem: DataFrame, pair_cap: int) -> DataFrame:
         | ((F.col("da") == F.col("db")) & (F.col("ra") < F.col("rb")))
     )
 
-    k = F.greatest(F.ceil(F.col("_n") / pair_cap), F.lit(1)).cast("int")
-    salted = (
-        gmem.join(big_ids, "group_id")  # inner: big-group members + _n
-        .withColumn("_k", k)
-        .withColumn("_s", F.pmod(F.xxhash64("resource"), F.col("_k")).cast("int"))
-    )
-    tasks = F.expr(
-        """
-        concat(
-          transform(sequence(0, _s), i -> struct(i AS ti, _s AS tj)),
-          CASE WHEN _s < _k - 1
-               THEN transform(sequence(_s + 1, _k - 1), j -> struct(_s AS ti, j AS tj))
-               ELSE array() END
-        )
-        """
-    )
-    ex = salted.withColumn("_t", F.explode(tasks)).select(
-        "group_id", "dataset", "resource", "_s",
-        F.col("_t.ti").alias("_ti"), F.col("_t.tj").alias("_tj"),
+    ex = salted_triangle(
+        gmem.join(big_ids, "group_id"),  # inner: big-group members + _n
+        pair_cap, "resource", ["group_id", "dataset", "resource"],
     )
     a = ex.select(
         "group_id", "_ti", "_tj",

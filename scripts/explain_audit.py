@@ -90,10 +90,11 @@ def main() -> int:
     sections.append(("jw_linking (blocked similarity join)", p))
     check("jw_linking: candidate join is hash/merge (blocked), not BNLJ/cartesian",
           "CartesianProduct" not in p)
-    check("jw_linking: Arrow-batched scorer (no row-at-a-time PythonUDF)",
-          "ArrowEvalPython" in p or "BatchEvalPython" not in p)
     sp = "\n".join(checkpointed)
     sections.append(("jw_linking bucket scorer (plan before the checkpoint)", sp))
+    # the scorer is the MapInArrow checked below: no Python UDF node at all
+    check("jw_linking: Arrow-batched scorer (no row-at-a-time PythonUDF)",
+          "BatchEvalPython" not in sp and "ArrowEvalPython" not in sp)
     check("jw_linking: bucket scorer is MapInArrow (no FlatMapGroupsInPandas)",
           "MapInArrow" in sp and "FlatMapGroupsInPandas" not in sp)
 

@@ -7,7 +7,10 @@ correspondences, no self-loops, group extraction.
 
 from __future__ import annotations
 
+import pytest
+
 from abecto_spark.operators.closure import MappingGraph, connected_components
+from abecto_spark.operators.rules import FixpointNotConverged
 
 from tests.conftest import rows_set
 
@@ -104,6 +107,17 @@ def test_connected_components_distributed_path(spark):
         expect.add(("n%02d" % i, "n%02d" % i))
         expect.add(("n%02d" % (i + 1), "n%02d" % i))
     assert got == expect
+
+
+def test_connected_components_distributed_raises_past_its_bound(spark):
+    """A 10-node chain needs more than two label-propagation rounds; the
+    distributed loop must raise, not return the partial labels (at two
+    rounds n09 still carries n07)."""
+    edges = _edges(spark, [("n%02d" % i, "n%02d" % (i + 1)) for i in range(9)])
+    with pytest.raises(FixpointNotConverged):
+        connected_components(edges, max_iterations=2, small_threshold=0)
+    got = rows_set(connected_components(edges, small_threshold=0), "canonical_id")
+    assert got == {("n00",)}
 
 
 def test_cc_nul_prefixed_node_names(spark):

@@ -12,7 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from abecto_spark.functions.jw import jaro_winkler_batch, jaro_winkler_ref
-from abecto_spark.functions.jw import jw_score
 from abecto_spark.operators.jw_mapping import (
     _block_keys,
     _score_buckets_duckdb,
@@ -135,8 +134,8 @@ def test_blocking_recall_vs_cross(spark):
 
 def test_unicode_linking_matches_reference_kernel(spark):
     """DuckDB's byte-walking JW must not leak into results: pairs touching
-    non-ASCII go through the exact codepoint kernel in both the bucket
-    scorer and the pair-level UDF. garçon/garcon scores 0.9222 (codepoints)
+    non-ASCII go through the exact codepoint kernel in the bucket scorer,
+    whichever the block mode. garçon/garcon scores 0.9222 (codepoints)
     vs 0.8944 (bytes) — at threshold 0.9 only the codepoint semantics
     links it."""
     rows = [
@@ -167,6 +166,19 @@ def test_unicode_linking_matches_reference_kernel(spark):
     assert got_cross == expect
 
 
+@pytest.mark.parametrize("block", ["cross", "grams"])
+def test_links_below_the_boost_gate_with_reference_semantics(spark, block):
+    """At thresholds <= 0.82 DuckDB's JW (boost only when jaro > 0.7) can
+    drop pairs the reference's unconditional boost keeps, so the scorer
+    sends every unequal pair to the exact kernel. abcdxyzw/abcdqrst has
+    jaro 0.5 and a 4-char common prefix: 0.8 under the reference, 0.667
+    under DuckDB."""
+    assert abs(jaro_winkler_ref("abcdxyzw", "abcdqrst") - 0.8) < 1e-12
+    vals = _values(spark, [("d1", "r1", "abcdxyzw"), ("d2", "r2", "abcdqrst")])
+    edges = jw_mapping(vals, ["label"], 0.75, block=block)
+    assert rows_set(edges, "src", "dst") == {("r1", "r2")}
+
+
 def test_salted_triangle_scoring_matches_unsalted_and_cross(spark):
     """Every string shares the "ab" bucket, so a small ``bucket_cap`` salts
     it into a triangle of tasks; each pair must be scored exactly once
@@ -195,11 +207,12 @@ def test_salted_triangle_scoring_matches_unsalted_and_cross(spark):
     unsalted = scored(_score_buckets_duckdb(keyed, threshold, r_min))
     s1 = strings.select(F.col("dataset").alias("d1"), "variable", F.col("value").alias("v1"))
     s2 = strings.select(F.col("dataset").alias("d2"), "variable", F.col("value").alias("v2"))
-    cross = scored(
-        s1.join(s2, "variable").where(F.col("d1") < F.col("d2"))
-        .withColumn("score", jw_score(F.col("v1"), F.col("v2"), threshold))
-        .where(F.col("score") >= threshold)
-    )
+    pairs = s1.join(s2, "variable").where(F.col("d1") < F.col("d2")).toPandas()
+    pairs["score"] = jaro_winkler_batch(pairs["v1"], pairs["v2"])
+    cross = {
+        (r.d1, r.v1, r.d2, r.v2, round(r.score, 9))
+        for r in pairs[pairs["score"] >= threshold].itertuples()
+    }
     assert ("d1", "abgarçon", "d2", "abgarcon") in {r[:4] for r in cross}
     assert len(cross) >= 20
     assert salted == unsalted == cross
