@@ -16,12 +16,16 @@ Incorrespondence semantics (`MappingProcessor.java:94-122`, README
   * ``incorr`` propagates over ``corr`` clusters (incorr ∘ corr → incorr),
     which falls out of checking incorrespondence at cluster level.
 
-The CC loop is a driver-side iteration of min-label propagation with
-``localCheckpoint()`` per round to cut lineage (Catalyst does not iterate,
+The distributed CC loop is min-label propagation on ``rules.iterate``
+(one ``cc_round`` — the ``rules.min_relax_round`` SSSP also runs — per
+round, lineage cut by ``localCheckpoint``; Catalyst does not iterate,
 SURVEY.md §4). Rounds ≈ cluster diameter; entity-link clusters are
 near-cliques so this converges in a handful of rounds even at 10^12-doc
 design scale, and every round is a plain shuffle join that AQE re-plans
 (skew-safe for hot hub resources).
+
+Every cluster-level check maps edges through the canonical map the same
+way, ``_cluster_edges``: a resource outside the map is its own cluster.
 """
 
 from __future__ import annotations
@@ -29,13 +33,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .rules import FixpointNotConverged
+from .rules import FixpointNotConverged, iterate, min_relax_round, relaxed
 
 
-def _bidirect(edges: DataFrame) -> DataFrame:
-    return edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+def _proper_edges(edges: DataFrame) -> DataFrame:
+    """The distinct (src, dst) rows of ``edges`` without self-loops."""
+    return edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+
+
+def cc_round(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """One distributed CC round over the symmetric edges ``sym``, lazily:
+    ``rules.min_relax_round`` with the neighbours' labels as messages (the
+    old label rides along, so the probe needs no join)."""
+    msgs = sym.join(labels.withColumnRenamed("node", "src"), "src").select(
+        F.col("dst").alias("node"), "label"
     )
+    return min_relax_round(labels, msgs, "label")
 
 
 def connected_components(
@@ -67,8 +80,10 @@ def connected_components(
 
         small_threshold = int(os.environ.get("ABECTO_CC_LOCAL_EDGE_MAX", 2_000_000))
     spark = edges.sparkSession
-    sym = _bidirect(edges).where(F.col("src") != F.col("dst")).distinct()
-    sym = sym.localCheckpoint(eager=True)
+    both = edges.select("src", "dst").union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    sym = _proper_edges(both).localCheckpoint(eager=True)
 
     n_edges = sym.count()
     if n_edges == 0:
@@ -123,29 +138,10 @@ def connected_components(
         .withColumn("label", F.col("node"))
     ).localCheckpoint(eager=True)
 
-    for i in range(max_iterations):
-        # propagate the min label across one hop; the old label rides
-        # along in the same aggregation so convergence detection needs no
-        # extra join over the full label table
-        nbr_labels = (
-            sym.join(labels.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"), "label",
-                F.lit(None).cast("string").alias("old"),
-            )
-        )
-        own = labels.select("node", "label", F.col("label").alias("old"))
-        agg = (
-            own.unionByName(nbr_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-        ).localCheckpoint(eager=True)
-
-        changed = agg.where(F.col("label") != F.col("old")).limit(1).count()
-        labels = agg.select("node", "label")
-        if changed == 0:
-            break
-    else:
+    labels, converged = iterate(
+        labels, lambda lab, _i: cc_round(sym, lab), max_iterations, relaxed("label")
+    )
+    if not converged:
         raise FixpointNotConverged(
             f"connected components did not converge in {max_iterations} rounds"
         )
@@ -176,25 +172,10 @@ def incremental_canonical(canonical: DataFrame, new_edges: DataFrame) -> DataFra
     rows) plus an anti-join for new resources.  History edges are never
     touched, so per-batch cost is independent of corpus size.
     """
-    batch = (
-        new_edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    c_src = canonical.select(
-        F.col("resource").alias("src"), F.col("canonical_id").alias("c_src")
-    )
-    c_dst = canonical.select(
-        F.col("resource").alias("dst"), F.col("canonical_id").alias("c_dst")
-    )
+    batch = _proper_edges(new_edges).localCheckpoint(eager=True)
     label_edges = (
-        batch.join(c_src, "src", "left")
-        .join(c_dst, "dst", "left")
-        .select(
-            F.coalesce("c_src", F.col("src")).alias("src"),
-            F.coalesce("c_dst", F.col("dst")).alias("dst"),
-        )
+        _cluster_edges(batch, canonical)
+        .select(F.col("c_src").alias("src"), F.col("c_dst").alias("dst"))
         .where(F.col("src") != F.col("dst"))
     )
     merge_map = connected_components(label_edges)  # (label, new canonical)
@@ -310,23 +291,24 @@ def canonicalize(resources: DataFrame, canonical: DataFrame, col: str = "resourc
     )
 
 
-def _cluster_pairs(edges: DataFrame, canonical: DataFrame) -> DataFrame:
-    """Map resource-level edges to normalized (min,max) cluster-id pairs."""
+def _cluster_edges(edges: DataFrame, canonical: DataFrame) -> DataFrame:
+    """(src, dst) ``edges`` plus each endpoint's cluster, ``c_src`` and
+    ``c_dst`` (its canonical id, or the resource itself outside
+    ``canonical``), and the normalized pair ``c_lo`` <= ``c_hi``."""
     c_src = canonical.select(
         F.col("resource").alias("src"), F.col("canonical_id").alias("c_src")
     )
     c_dst = canonical.select(
         F.col("resource").alias("dst"), F.col("canonical_id").alias("c_dst")
     )
-    with_c = (
+    return (
         edges.join(c_src, "src", "left")
         .join(c_dst, "dst", "left")
         .withColumn("c_src", F.coalesce("c_src", F.col("src")))
         .withColumn("c_dst", F.coalesce("c_dst", F.col("dst")))
+        .withColumn("c_lo", F.least("c_src", "c_dst"))
+        .withColumn("c_hi", F.greatest("c_src", "c_dst"))
     )
-    return with_c.select(
-        F.least("c_src", "c_dst").alias("c_lo"), F.greatest("c_src", "c_dst").alias("c_hi")
-    ).distinct()
 
 
 class MappingGraph:
@@ -361,12 +343,7 @@ class MappingGraph:
     def add_correspondences(self, new_edges: DataFrame, max_conflict_rounds: int = 3) -> DataFrame:
         """Accept a batch of corr edges, vetoing contradictions with the
         existing incorrespondence closure. Returns the accepted edges."""
-        cand = (
-            new_edges.select("src", "dst")
-            .where(F.col("src") != F.col("dst"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        cand = _proper_edges(new_edges).localCheckpoint(eager=True)
         if not self._has_incorr:
             # no constraints: plain accumulate; maintain the canonical map
             # incrementally when one exists (O(|batch|), history untouched)
@@ -380,20 +357,10 @@ class MappingGraph:
         for _ in range(max_conflict_rounds):
             canonical = self.canonical()
             # cluster-level incorrespondence closure (incorr ∘ corr → incorr)
-            incorr_cl = _cluster_pairs(self.incorr, canonical)
-            cand_cl = (
-                canonicalize(cand.withColumnRenamed("src", "resource"), canonical)
-                .withColumnRenamed("canonical_id", "c_src")
-                .withColumnRenamed("resource", "src")
+            incorr_cl = (
+                _cluster_edges(self.incorr, canonical).select("c_lo", "c_hi").distinct()
             )
-            cand_cl = (
-                canonicalize(cand_cl.withColumnRenamed("dst", "resource"), canonical)
-                .withColumnRenamed("canonical_id", "c_dst")
-                .withColumnRenamed("resource", "dst")
-            )
-            cand_cl = cand_cl.withColumn("c_lo", F.least("c_src", "c_dst")).withColumn(
-                "c_hi", F.greatest("c_src", "c_dst")
-            )
+            cand_cl = _cluster_edges(cand, canonical)
             # direct veto: an edge merging two clusters known incorrespondent
             accepted = (
                 cand_cl.join(F.broadcast(incorr_cl), ["c_lo", "c_hi"], "left_anti")
@@ -405,13 +372,12 @@ class MappingGraph:
             # transitive conflicts: did the batch as a whole merge two sides
             # of an incorrespondence? (a—m, m—b added together while a!~b)
             violated = (
-                _cluster_pairs(self.incorr, new_canonical)
+                _cluster_edges(self.incorr, new_canonical)
                 .where(F.col("c_lo") == F.col("c_hi"))
                 .select(F.col("c_lo").alias("bad_cluster"))
                 .distinct()
             )
-            n_violated = violated.limit(1).count()
-            if n_violated == 0:
+            if violated.isEmpty():
                 self.corr = merged.localCheckpoint(eager=True)
                 self._canonical = new_canonical
                 self._has_corr = True
@@ -441,9 +407,9 @@ class MappingGraph:
 
     def add_incorrespondences(self, new_edges: DataFrame) -> DataFrame:
         """Accept incorr edges unless the endpoints already correspond."""
-        cand = new_edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+        cand = _proper_edges(new_edges)
         if self._has_corr:
-            cand_cl = _cluster_pairs_with_edges(cand, self.canonical())
+            cand_cl = _cluster_edges(cand, self.canonical())
             accepted = cand_cl.where(F.col("c_lo") != F.col("c_hi")).select("src", "dst")
         else:
             accepted = cand
@@ -459,20 +425,3 @@ class MappingGraph:
             .groupBy("canonical_id")
             .agg(F.sort_array(F.collect_set("resource")).alias("members"))
         )
-
-
-def _cluster_pairs_with_edges(edges: DataFrame, canonical: DataFrame) -> DataFrame:
-    c_src = canonical.select(
-        F.col("resource").alias("src"), F.col("canonical_id").alias("c_src")
-    )
-    c_dst = canonical.select(
-        F.col("resource").alias("dst"), F.col("canonical_id").alias("c_dst")
-    )
-    return (
-        edges.join(c_src, "src", "left")
-        .join(c_dst, "dst", "left")
-        .withColumn("c_src", F.coalesce("c_src", F.col("src")))
-        .withColumn("c_dst", F.coalesce("c_dst", F.col("dst")))
-        .withColumn("c_lo", F.least("c_src", "c_dst"))
-        .withColumn("c_hi", F.greatest("c_src", "c_dst"))
-    )

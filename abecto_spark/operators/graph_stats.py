@@ -12,7 +12,8 @@ itself, the natural next consumer in a kg_construct deployment).
                          — fixed-iteration PageRank (damping d, k
                            iterations), uniform, edge-weighted and
                            seed-personalized.  All three run the one
-                           lazy round ``pagerank_round`` in one loop; they
+                           lazy round ``pagerank_round`` on
+                           ``rules.iterate``; they
                            differ only in the contribution expression
                            (rank/od or rank·w/od) and in the restart and
                            teleport terms.  Per round one shuffle on the
@@ -55,6 +56,11 @@ itself, the natural next consumer in a kg_construct deployment).
                            bounded by max_depth rounds, early exit when
                            the frontier drains.
 
+Round loops: BFS runs on ``rules.fixpoint`` (rule ``frontier_rule``);
+PageRank, label propagation, k-core and weighted distances run their
+lazy rounds (``*_round``) on ``rules.iterate``. HITS, harmonic
+centrality and the walks keep their own loops (comments say why).
+
 The undirected operators (triangle_counts, kcore, link_prediction_scores,
 clustering_coefficient, degree_assortativity, label_propagation) read
 one simple-graph builder (``_simple_graph``: least/greatest, no
@@ -69,11 +75,9 @@ the dedup family's banded LSH bounds candidate pairs.
 
 from __future__ import annotations
 
-from functools import partial
-
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .rules import fixpoint
+from .rules import fixpoint, iterate, min_relax_round, relaxed
 
 
 def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -181,20 +185,6 @@ def _pagerank_graph(edges: DataFrame, src: str, dst: str, weight=None):
     return e, nodes, od
 
 
-def _pagerank_loop(ranks, iterations, *round_args, store=None, token="",
-                   resume=True) -> DataFrame:
-    """``iterations`` rounds of ``pagerank_round(ranks, *round_args)``,
-    each cut by ``localCheckpoint`` or, with a ``store``, written as
-    snapshot stage ``pagerank_iter_{i}`` (resumed when complete)."""
-    for i in range(1, iterations + 1):
-        step = partial(pagerank_round, ranks, *round_args)
-        if store is None:
-            ranks = step().localCheckpoint()
-        else:
-            ranks, _ = store.stage(f"pagerank_iter_{i}", token, step, resume)
-    return ranks
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
@@ -232,12 +222,15 @@ def pagerank(
     n = nodes.count()  # the one driver scalar: |V|
     # scope-by-store contract (same as the docs pipeline): one store root
     # per graph; the token guards damping/|V| config drift within it
-    return _pagerank_loop(
-        nodes.withColumn("rank", F.lit(1.0 / n)), iterations,
-        e, od, nodes, damping, F.col("rank") / F.col("od"),
-        F.lit((1.0 - damping) / n), F.col("dangling") / F.lit(float(n)),
-        store=store, token=f"d={damping!r};n={n}", resume=resume,
-    )
+    return iterate(
+        nodes.withColumn("rank", F.lit(1.0 / n)),
+        lambda r, _i: pagerank_round(
+            r, e, od, nodes, damping, F.col("rank") / F.col("od"),
+            F.lit((1.0 - damping) / n), F.col("dangling") / F.lit(float(n)),
+        ),
+        iterations, store=store, name="pagerank",
+        token=f"d={damping!r};n={n}", resume=resume,
+    )[0]
 
 
 def _simple_graph(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -254,10 +247,11 @@ def _simple_graph(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataF
 
 
 def _degrees(und: DataFrame) -> DataFrame:
-    """(node, deg) for every node of the simple graph ``und``."""
+    """(node, deg) for every node of the simple graph ``und``; both
+    endpoints come from one pass (a union of two would plan ``und``
+    twice)."""
     return (
-        und.select(F.col("u").alias("node"))
-        .unionByName(und.select(F.col("v").alias("node")))
+        und.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count("*").alias("deg"))
     )
@@ -324,13 +318,12 @@ class GraphStatsError(ValueError):
     pass
 
 
-def kcore_round(g: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
-    """One k-core peel round over the simple graph ``g``, lazily:
-    (the degrees of ``g``, the edges of ``g`` whose endpoints both have
-    degree >= k)."""
-    deg = _degrees(g)
+def kcore_round(g: DataFrame, deg: DataFrame, k: int) -> DataFrame:
+    """One k-core peel round, lazily: the degrees of the edges of ``g``
+    whose endpoints both have degree >= k in ``deg``. A peeled node keeps
+    no edge, so every round may filter the same ``g``."""
     keep = deg.where(F.col("deg") >= k).select("node")
-    return deg, (
+    return _degrees(
         g.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
         .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
     )
@@ -341,41 +334,39 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 12,
     """Nodes of the k-core of the undirected simple graph, with their
     degree inside the core: rows (node, core_deg), core_deg >= k.
 
-    Iterative peeling: drop nodes with degree < k, recompute degrees on
-    the surviving subgraph, repeat to fixpoint.  Each round is one
-    degree aggregation plus two semi-joins (both broadcast-able once the
-    survivor set shrinks); ``localCheckpoint`` keeps lineage flat.  The
-    loop raises loudly after ``max_rounds`` non-converged rounds rather
-    than running unbounded — callers pick the bound, and the driver
-    oracle unrolls exactly that many rounds (extra unrolled rounds past
-    the fixpoint are no-ops, so equality is exact whenever the loop
-    converges within the bound).
+    Iterative peeling on ``rules.iterate``, whose state (and result) is
+    the degree table: drop nodes with degree < k, recompute degrees on
+    the surviving subgraph, repeat until a round removes no edge (an
+    empty core too needs that round).  Each round is two semi-joins
+    (both broadcast-able once the survivor set shrinks) plus one degree
+    aggregation.  The loop raises loudly after ``max_rounds``
+    non-converged rounds rather than running unbounded — callers pick
+    the bound, and the driver oracle unrolls exactly that many rounds
+    (extra unrolled rounds past the fixpoint are no-ops, so equality is
+    exact whenever the loop converges within the bound).
 
     Scale: the first rounds dominate (full |E| degree agg); each
-    subsequent round touches only surviving edges, and real-world peel
-    sequences collapse geometrically.  The convergence probe is an edge
-    count per round — a 1-long scalar, no data to the driver.
+    subsequent round aggregates only surviving edges (the semi-joins
+    filter all |E| map-side), and real-world peel sequences collapse
+    geometrically.  The convergence probe is a node count per round — a
+    1-long scalar, no data to the driver.
     """
     g = _simple_graph(edges, src, dst).localCheckpoint()
-    n_edges = g.count()
-    for _ in range(max_rounds):
-        deg, g2 = kcore_round(g, k)
-        g2 = g2.localCheckpoint()
-        n2 = g2.count()
-        if n2 == n_edges:
-            # converged: g is the core and deg its in-core degree (>= k)
-            return deg.withColumnRenamed("deg", "core_deg")
-        g, n_edges = g2, n2
-        if n_edges == 0:
-            # empty core: preserve the caller's node type
-            return (
-                g.select(F.col("u").alias("node"))
-                .limit(0)
-                .withColumn("core_deg", F.lit(0).cast("long"))
-            )
-    raise GraphStatsError(
-        f"k-core peeling did not converge within {max_rounds} rounds"
-    )
+    deg = _degrees(g).localCheckpoint()
+    sizes = [deg.count()]
+
+    def until(_prev: DataFrame, new: DataFrame) -> bool:
+        # a round that removes an edge removes a whole node below k with
+        # it, so the node count holds exactly when no edge was removed
+        sizes.append(new.count())
+        return sizes[-1] == sizes[-2]
+
+    core, converged = iterate(deg, lambda d, _i: kcore_round(g, d, k), max_rounds, until)
+    if not converged:
+        raise GraphStatsError(
+            f"k-core peeling did not converge within {max_rounds} rounds"
+        )
+    return core.withColumnRenamed("deg", "core_deg")
 
 
 def link_prediction_scores(
@@ -562,14 +553,19 @@ def bfs_distances(
     seeds0 = seeds.select(
         F.col(seeds.columns[0]).alias("node"), F.lit(0).cast("long").alias("dist")
     )
+    return fixpoint(seeds0, frontier_rule(e), max_depth, key=["node"])[0]
+
+
+def frontier_rule(e: DataFrame):
+    """BFS's ``rules.fixpoint`` rule over (s, d) edges: the targets of
+    the frontier's out-edges, tagged with the round index as ``dist``."""
 
     def rule(frontier: DataFrame, _settled: DataFrame, depth: int) -> DataFrame:
         return e.join(frontier.select(F.col("node").alias("s")), "s").select(
             F.col("d").alias("node"), F.lit(depth).cast("long").alias("dist")
         )
 
-    settled, _converged = fixpoint(seeds0, rule, max_depth, key=["node"])
-    return settled
+    return rule
 
 
 def pagerank_weighted(
@@ -592,11 +588,14 @@ def pagerank_weighted(
     """
     e, nodes, od = _pagerank_graph(edges, src, dst, weight_col)
     n = nodes.count()  # the one driver scalar: |V|
-    return _pagerank_loop(
-        nodes.withColumn("rank", F.lit(1.0 / n)), iterations,
-        e, od, nodes, damping, F.col("rank") * F.col("w") / F.col("od"),
-        F.lit((1.0 - damping) / n), F.col("dangling") / F.lit(float(n)),
-    )
+    return iterate(
+        nodes.withColumn("rank", F.lit(1.0 / n)),
+        lambda r, _i: pagerank_round(
+            r, e, od, nodes, damping, F.col("rank") * F.col("w") / F.col("od"),
+            F.lit((1.0 - damping) / n), F.col("dangling") / F.lit(float(n)),
+        ),
+        iterations,
+    )[0]
 
 
 def personalized_pagerank(
@@ -637,11 +636,14 @@ def personalized_pagerank(
     reset = nodes.join(
         seed_nodes.withColumn("_r", F.lit(1.0 / n_seeds)), "node", "left"
     ).select("node", F.coalesce("_r", F.lit(0.0)).alias("r")).localCheckpoint()
-    return _pagerank_loop(
-        reset.select("node", F.col("r").alias("rank")), iterations,
-        e, od, reset, damping, F.col("rank") / F.col("od"),
-        F.lit(1.0 - damping) * F.col("r"), F.col("dangling") * F.col("r"),
-    )
+    return iterate(
+        reset.select("node", F.col("r").alias("rank")),
+        lambda r, _i: pagerank_round(
+            r, e, od, reset, damping, F.col("rank") / F.col("od"),
+            F.lit(1.0 - damping) * F.col("r"), F.col("dangling") * F.col("r"),
+        ),
+        iterations,
+    )[0]
 
 
 def lpa_round(nbrs: DataFrame, labels: DataFrame) -> DataFrame:
@@ -689,8 +691,8 @@ def label_propagation(
     neighbor-label join (on node id, high cardinality) and one for the
     (node, label) count aggregate; the argmax is a single
     ``max(struct(cnt, -label))`` aggregate — no low-cardinality window
-    anywhere.  Lineage is cut per round with ``localCheckpoint`` like
-    the PageRank loop.  Mirrors the role of GraphX's LabelPropagation
+    anywhere.  The rounds run on ``rules.iterate`` like the PageRank
+    loop.  Mirrors the role of GraphX's LabelPropagation
     in a Spark deployment; reference parity anchor: ABECTO groups
     correspondences by connected closure
     (``processing/MappingProcessor.java``) — LPA is the denser-community
@@ -705,9 +707,7 @@ def label_propagation(
         nbrs.select("node").distinct().withColumn("label", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(rounds):
-        labels = lpa_round(nbrs, labels).localCheckpoint()
-    return labels
+    return iterate(labels, lambda lab, _i: lpa_round(nbrs, lab), rounds)[0]
 
 
 def hits(
@@ -741,33 +741,10 @@ def hits(
     e, nodes = _edge_graph(edges, src, dst)
     hubs = nodes.withColumn("hub", F.lit(1.0))
     auths = None
+    # two frames per round (auths feed hubs), so not rules.iterate
     for _ in range(iterations):
-        a_raw = (
-            e.join(hubs.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("hub").alias("v"))
-        )
-        a_norm = a_raw.agg(
-            F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm")
-        )
-        auths = (
-            a_raw.crossJoin(F.broadcast(a_norm))
-            .select("node", (F.col("v") / F.col("nrm")).alias("auth"))
-            .localCheckpoint()
-        )
-        h_raw = (
-            e.join(auths.withColumnRenamed("node", "dst"), "dst")
-            .groupBy(F.col("src").alias("node"))
-            .agg(F.sum("auth").alias("v"))
-        )
-        h_norm = h_raw.agg(
-            F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm")
-        )
-        hubs = (
-            h_raw.crossJoin(F.broadcast(h_norm))
-            .select("node", (F.col("v") / F.col("nrm")).alias("hub"))
-            .localCheckpoint()
-        )
+        auths = _hits_half(e, hubs, "src", "dst", "hub", "auth")
+        hubs = _hits_half(e, auths, "dst", "src", "auth", "hub")
     return (
         nodes.join(hubs, "node", "left")
         .join(auths, "node", "left")
@@ -776,6 +753,24 @@ def hits(
             F.coalesce("hub", F.lit(0.0)).alias("hub"),
             F.coalesce("auth", F.lit(0.0)).alias("auth"),
         )
+    )
+
+
+def _hits_half(e: DataFrame, scores: DataFrame, by: str, to: str,
+               score: str, out: str) -> DataFrame:
+    """One HITS half-step, checkpointed: (node, ``out``) for every ``to``
+    endpoint of ``e``, the sum of ``score`` over its ``by`` neighbours
+    (``scores``: (node, ``score``)), L2-normalized."""
+    raw = (
+        e.join(scores.withColumnRenamed("node", by), by)
+        .groupBy(F.col(to).alias("node"))
+        .agg(F.sum(score).alias("v"))
+    )
+    norm = raw.agg(F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm"))
+    return (
+        raw.crossJoin(F.broadcast(norm))
+        .select("node", (F.col("v") / F.col("nrm")).alias(out))
+        .localCheckpoint()
     )
 
 
@@ -819,11 +814,7 @@ def harmonic_centrality(
         .withColumn("dist", F.lit(0).cast("long"))
         .localCheckpoint(eager=True)
     )
-    # settled stays a LAZY union of the per-level checkpointed
-    # frontiers, so this loop stays outside rules.fixpoint, whose eager
-    # re-checkpoint of the accumulated set would re-materialize
-    # O(rounds x |settled|) rows of the |S| x reach state (SCALE.md:
-    # 24.0 -> 21.3 s at sf0.1 from the lazy union alone)
+    # lazy union of the frontiers, not rules.fixpoint (SCALE.md: 24.0 -> 21.3 s)
     settled = level0
     frontier = level0.select("seed", "node")
     for depth in range(1, max_depth + 1):
@@ -860,11 +851,13 @@ def weighted_distances(
     (0 for the seeds).  Negative weights are rejected loudly — with a
     hop bound they would make the result a path-length artifact.
 
-    Each round is one equi-join shuffle of the edge table against the
-    current distance vector keyed on the edge source, a union, and a
-    map-side-combining min aggregate — the textbook distributed
-    relaxation; ``localCheckpoint`` per round keeps lineage flat, and an
-    early exit fires when a round improves nothing.  Unlike the BFS
+    Each round (``sssp_round``) is one equi-join shuffle of the edge
+    table against the current distance vector keyed on the edge source,
+    a union, and a map-side-combining min aggregate — the textbook
+    distributed relaxation, the same ``rules.min_relax_round`` as the
+    distributed CC rounds.  The rounds run on ``rules.iterate``; an
+    early exit fires when a round changes no distance (the changed-row
+    count is also what materializes the round).  Unlike the BFS
     frontier (``bfs_distances``), a settled set cannot prune here
     (a longer-hop path may still be cheaper), so the per-round cost is
     the full |E| join — the price of weights.
@@ -873,7 +866,7 @@ def weighted_distances(
         F.col(src).alias("s"), F.col(dst).alias("d"),
         F.col(weight).cast("double").alias("w"),
     ).localCheckpoint()
-    if e.where(F.col("w") < 0).limit(1).count() > 0:
+    if not e.where(F.col("w") < 0).isEmpty():
         raise GraphStatsError("weighted_distances requires weights >= 0")
     dist = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
@@ -881,25 +874,18 @@ def weighted_distances(
         .withColumn("dist", F.lit(0.0))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_hops):
-        relaxed = (
-            e.join(dist.withColumnRenamed("node", "s"), "s")
-            .select(F.col("d").alias("node"),
-                    (F.col("dist") + F.col("w")).alias("dist"))
-        )
-        nxt = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        # one row per node on both sides and nxt keeps every node of
-        # dist, so no new (node, dist) pair means nxt == dist
-        unchanged = nxt.join(dist, ["node", "dist"], "left_anti").isEmpty()
-        dist = nxt
-        if unchanged:
-            break
-    return dist
+    dist, _ = iterate(dist, lambda d, _i: sssp_round(e, d), max_hops, relaxed("dist"))
+    return dist.select("node", "dist")
+
+
+def sssp_round(e: DataFrame, dist: DataFrame) -> DataFrame:
+    """One Bellman-Ford relaxation round over (s, d, w) edges, lazily:
+    ``rules.min_relax_round`` with ``dist + w`` along every out-edge of
+    a reached node as the messages."""
+    msgs = e.join(dist.withColumnRenamed("node", "s"), "s").select(
+        F.col("d").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
+    )
+    return min_relax_round(dist, msgs, "dist")
 
 
 def deterministic_walks(
@@ -958,6 +944,7 @@ def deterministic_walks(
         .withColumn("step", F.lit(0))
     )
     out = cur
+    # every round's frame is part of the result, so not rules.iterate
     for i in range(1, walk_length + 1):
         pick = 1 + (F.col("s") * 31 + F.lit(i)) % F.col("od")
         cur = (

@@ -42,6 +42,34 @@ _SCORED_SCHEMA = (
 )
 
 
+# _score_buckets_duckdb's per-task query over t, the task's salted strings:
+# one hash self-join over every bucket of the task; a salted cross task
+# (ti < tj) keeps only the pairs across its two salt groups. DuckDB boosts
+# only when jaro > 0.7, the reference always: the two agree on every pair
+# scoring strictly above 0.82 (at jaro <= 0.7 the boosted score is <=
+# 0.82), so at thresholds <= 0.82 ($boost false) every unequal pair leaves
+# with a NULL score and is scored by the exact codepoint kernel in the
+# task. So is a pair touching a non-ASCII string (byte length != char
+# length): DuckDB's JW walks UTF-8 bytes.
+_SCORER_SQL = """
+WITH u AS (SELECT *, strlen(value) = length(value) AS _ascii FROM t)
+SELECT * FROM (
+  SELECT a.dataset AS d1, a.variable AS variable, a.value AS v1,
+         b.dataset AS d2, b.value AS v2,
+         CASE WHEN a.value = b.value THEN 1.0::DOUBLE
+              WHEN $boost AND a._ascii AND b._ascii
+              THEN jaro_winkler_similarity(a.value, b.value)
+         END AS score
+  FROM u a JOIN u b
+    ON a.variable = b.variable AND a.bk = b.bk
+   AND a._ti = b._ti AND a._tj = b._tj
+   AND a.dataset < b.dataset AND (a._ti = a._tj OR a._s <> b._s)
+   AND least(length(a.value), length(b.value))
+       >= $r_min * greatest(length(a.value), length(b.value))
+) WHERE score IS NULL OR score >= $threshold
+"""
+
+
 def _score_buckets_duckdb(
     keyed: DataFrame, threshold: float, r_min: float, bucket_cap: int = 4000
 ) -> DataFrame:
@@ -85,33 +113,8 @@ def _score_buckets_duckdb(
             return
         with duckdb.connect(config={"threads": 1}) as con:
             con.register("t", pa.Table.from_batches(batches))
-            # one hash self-join over every bucket of the task; a salted cross
-            # task (ti < tj) keeps only the pairs across its two salt groups.
-            # DuckDB boosts only when jaro > 0.7, the reference always: the
-            # two agree on every pair scoring strictly above 0.82 (at jaro
-            # <= 0.7 the boosted score is <= 0.82), so at thresholds <= 0.82
-            # ($boost false) every unequal pair leaves with a NULL score and
-            # is scored by the exact codepoint kernel below. So is a pair
-            # touching a non-ASCII string (byte length != char length):
-            # DuckDB's JW walks UTF-8 bytes
             reader = con.execute(
-                """
-                WITH u AS (SELECT *, strlen(value) = length(value) AS _ascii FROM t)
-                SELECT * FROM (
-                  SELECT a.dataset AS d1, a.variable AS variable, a.value AS v1,
-                         b.dataset AS d2, b.value AS v2,
-                         CASE WHEN a.value = b.value THEN 1.0::DOUBLE
-                              WHEN $boost AND a._ascii AND b._ascii
-                              THEN jaro_winkler_similarity(a.value, b.value)
-                         END AS score
-                  FROM u a JOIN u b
-                    ON a.variable = b.variable AND a.bk = b.bk
-                   AND a._ti = b._ti AND a._tj = b._tj
-                   AND a.dataset < b.dataset AND (a._ti = a._tj OR a._s <> b._s)
-                   AND least(length(a.value), length(b.value))
-                       >= $r_min * greatest(length(a.value), length(b.value))
-                ) WHERE score IS NULL OR score >= $threshold
-                """,
+                _SCORER_SQL,
                 {"boost": bool(threshold > 0.82), "r_min": r_min, "threshold": threshold},
             ).fetch_record_batch(10_000)
             schema = pa.schema([

@@ -1,14 +1,13 @@
-"""Semi-naive fixpoint evaluation — the Spark re-expression of the
+"""The package's two round loops, each cutting lineage with a
+``localCheckpoint`` per round (Catalyst does not iterate, SURVEY.md §4):
+the set-growing ``fixpoint`` and the state-replacing ``iterate``.
+
+``fixpoint`` is semi-naive evaluation, the Spark re-expression of the
 reference's SparqlConstructProcessor / ForwardRuleReasoningProcessor
 (`SparqlConstructProcessor.java:30-56`, `ForwardRuleReasoningProcessor.java:33-44`):
-a rule is a join-project over the current relation; iteration re-runs it
-until no new rows appear (or ``max_iterations``), with ``localCheckpoint``
-per round to cut lineage (Catalyst does not iterate, SURVEY.md §4).
-
-Semi-naive: each round joins only the *delta* against the full relation,
-not all-pairs again — the work per round is proportional to new facts.
-
-``fixpoint`` is the package's one such loop. In round ``i`` (1-based)
+a rule is a join-project over the current relation; each round joins
+only the *delta* against the full relation, until no new rows appear
+(or ``max_iterations``). In round ``i`` (1-based)
 ``rule(delta, all_rows, i)`` builds candidates; the kernel keeps one per
 ``key`` (default: every column, i.e. ``distinct``; with a subset the
 other columns must be a function of the key — deduplicating on it
@@ -25,6 +24,13 @@ constraint inference trips over plans built from repeatedly
 counts active loops under a lock — the first to enter saves the
 session's value, the last to leave restores it — so loops on several
 threads cannot leave it off.
+
+``iterate``: round ``i`` is ``step(state, i)`` under a lazy
+``localCheckpoint`` or, with a ``store``, snapshot stage
+``{name}_iter_{i}`` (resumed when complete). ``until(prev, new)`` must
+end in one full ``count()`` over ``new``, so one action materializes the
+round and decides convergence. ``converged`` is false only when
+``until`` never fired; raising or returning on it is the caller's call.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from __future__ import annotations
 import threading
 from collections.abc import Callable, Sequence
 from contextlib import contextmanager
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +48,8 @@ _cp_lock = threading.Lock()
 _cp_active = 0  # loops inside constraint_propagation_off
 _cp_saved = "true"  # the value the first of them found
 Rule = Callable[[DataFrame, DataFrame, int], DataFrame]
+Step = Callable[[DataFrame, int], DataFrame]
+Probe = Callable[[DataFrame, DataFrame], bool]
 
 
 class FixpointNotConverged(RuntimeError):
@@ -101,6 +110,45 @@ def fixpoint(
             if stop is not None and stop(new):
                 return all_rows, True
         return all_rows, False
+
+
+def iterate(
+    state: DataFrame, step: Step, rounds: int, until: Probe | None = None,
+    store=None, name: str = "", token: str = "", resume: bool = True,
+) -> tuple[DataFrame, bool]:
+    """Up to ``rounds`` rounds of ``state = step(state, i)`` as ``(state,
+    converged)`` (round contract in the module docstring)."""
+    for i in range(1, rounds + 1):
+        if store is None:
+            new = step(state, i).localCheckpoint()
+        else:
+            new, _ = store.stage(
+                f"{name}_iter_{i}", token, partial(step, state, i), resume
+            )
+        if until is not None and until(state, new):
+            return new, True
+        state = new
+    return state, False
+
+
+def min_relax_round(state: DataFrame, msgs: DataFrame, col: str) -> DataFrame:
+    """One min-relaxation round (CC's min label, SSSP's min distance),
+    lazily: (node, ``col``, old) per node of ``state`` or ``msgs``, ``col``
+    the min of its value and messages, ``old`` its value (NULL if new)."""
+    old = F.lit(None).cast(state.schema[col].dataType)
+    return (
+        state.select("node", col, F.col(col).alias("old"))
+        .unionByName(msgs.select("node", col, old.alias("old")))
+        .groupBy("node")
+        .agg(F.min(col).alias(col), F.min("old").alias("old"))
+    )
+
+
+def relaxed(col: str) -> Probe:
+    """``iterate`` probe for ``min_relax_round`` loops: no row of the
+    round changed (``old IS NULL OR col <> old``), counted in full."""
+    changed = F.col("old").isNull() | (F.col(col) != F.col("old"))
+    return lambda _prev, new: new.where(changed).count() == 0
 
 
 def reach_rule(edges: DataFrame) -> Rule:

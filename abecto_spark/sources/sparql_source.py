@@ -371,6 +371,8 @@ def sparql_source(
             loaded, on="r", how="left_anti"
         ).localCheckpoint(eager=True)
 
+    # the crawl rounds grow two relations (model, loaded) from a remote
+    # endpoint, so they stay outside rules.fixpoint / rules.iterate
     # phase 2: bounded-distance description loading (`:323-341`)
     for distance in range(max_distance + 1):
         if to_load.isEmpty():

@@ -88,8 +88,27 @@ def main() -> int:
         frame.localCheckpoint = local_checkpoint
     p = plan_of(jw)
     sections.append(("jw_linking (blocked similarity join)", p))
+    # the candidate join runs inside DuckDB: EXPLAIN the scorer's query
+    # over an empty table typed like its input (EXPLAIN takes no
+    # parameters, so they are bound inline)
+    import duckdb
+    import pyarrow as pa
+
+    from abecto_spark.operators.jw_mapping import _SCORER_SQL
+
+    sql = _SCORER_SQL.replace("$boost", "true").replace("$r_min", "0.5")
+    cols = ("dataset", "variable", "value", "bk", "_s", "_ti", "_tj")
+    with duckdb.connect() as con:
+        con.register("t", pa.table({
+            c: pa.array([], pa.int32() if c[0] == "_" else pa.string()) for c in cols
+        }))
+        sql = "EXPLAIN " + sql.replace("$threshold", "0.9")
+        dp = "\n".join(r[1] for r in con.execute(sql).fetchall())
+    sections.append(("jw_linking candidate join (DuckDB EXPLAIN of the scorer query)", dp))
     check("jw_linking: candidate join is hash/merge (blocked), not BNLJ/cartesian",
-          "CartesianProduct" not in p)
+          "HASH_JOIN" in dp
+          and not any(op in dp for op in (
+              "CROSS_PRODUCT", "NESTED_LOOP_JOIN", "BLOCKWISE_NL_JOIN")))
     sp = "\n".join(checkpointed)
     sections.append(("jw_linking bucket scorer (plan before the checkpoint)", sp))
     # the scorer is the MapInArrow checked below: no Python UDF node at all
@@ -501,19 +520,22 @@ def main() -> int:
         shutil.rmtree(tdir, ignore_errors=True)
 
     # ---- 8. graph analytics over the materialized KG (round 5) --------
-    # the PageRank, k-core and LPA loops checkpoint every round eagerly,
-    # hiding the plan, so each is audited on one lazy round of its own
-    # round function.
+    # the graph loops checkpoint every round, hiding the plan, so each
+    # (PageRank, k-core, LPA, BFS, SSSP) is audited on one lazy round of
+    # its own round function.
     # pagerank: the per-iteration update must be a hash-aggregated join
     # fan-in (partial aggregation on the dst key), never a cartesian;
     # the dangling 1-row aggregate must come back via a broadcast.
     from abecto_spark.operators.graph_stats import (
         _arcs,
+        _degrees,
         _pagerank_graph,
         _simple_graph,
+        frontier_rule,
         kcore_round,
         lpa_round,
         pagerank_round,
+        sssp_round,
         triangle_counts,
     )
 
@@ -548,7 +570,8 @@ def main() -> int:
 
     # kcore: one peel round: degree agg must partially combine; keep-set
     # joins must broadcast or hash, never nest-loop over data
-    _, peel = kcore_round(_simple_graph(edges), 15)
+    und = _simple_graph(edges)
+    peel = kcore_round(und, _degrees(und), 15)
     p = plan_of(peel)
     sections.append(("kcore single peel round (partial agg + semi-joins)", p))
     check("kcore round: no cartesian product", "CartesianProduct" not in p)
@@ -594,19 +617,15 @@ def main() -> int:
         "partial_count" in p,
     )
 
-    # bfs_distances: audit one lazily-rebuilt frontier step — the edge
+    # bfs_distances: audit round 1 of its own fixpoint round — the edge
     # probe must be a hash join on the source key and the settled-set
     # anti-join a hash/broadcast anti, never a nested loop
+    from abecto_spark.operators.rules import fixpoint_round, reach_rule
+
     seeds0 = nodes.where(F.col("node") % 97 == 0)
-    settled0 = seeds0.withColumn("dist", F.lit(0).cast("long"))
-    bfs_step = (
-        edges.join(seeds0.withColumnRenamed("node", "src"), "src")
-        .select(F.col("dst").alias("node"))
-        .distinct()
-        .join(settled0.select("node"), "node", "left_anti")
-        .withColumn("dist", F.lit(1).cast("long"))
-    )
-    p = plan_of(bfs_step)
+    level0 = seeds0.withColumn("dist", F.lit(0).cast("long"))
+    se = edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
+    p = plan_of(fixpoint_round(frontier_rule(se), level0, level0, 1, key=["node"]))
     sections.append(("kg_bfs_distances single frontier step (hash join + anti-join)", p))
     check("bfs step: no cartesian product", "CartesianProduct" not in p)
     check("bfs step: no nested-loop join", "BroadcastNestedLoopJoin" not in p)
@@ -618,8 +637,6 @@ def main() -> int:
     # rules.fixpoint: one lazily built transitive_closure round (round 1,
     # delta = all rows = the edges) — the kernel's delta exclusion must
     # be a keyed anti join, never a nested loop or a cartesian product
-    from abecto_spark.operators.rules import fixpoint_round, reach_rule
-
     p = plan_of(fixpoint_round(reach_rule(edges), edges, edges, 1))
     sections.append(("rule_fixpoint single kernel round (rules.fixpoint)", p))
     anti = [
@@ -825,26 +842,12 @@ def main() -> int:
 
     # kg_sssp: each relaxation is an |E| join + map-side-combining min.
     # The returned DF is checkpoint-cut (flat lineage is the point), so
-    # audit one relaxation round built declaratively, like the LPA row
-    ew = q._part_edges_weighted(spark, SF_DIR)
-    nodes0 = (
-        ew.select(F.col("src").alias("node"))
-        .unionByName(ew.select(F.col("dst").alias("node")))
-        .distinct()
+    # audit one lazy round of its own round function, like the LPA row
+    ew = q._part_edges_weighted(spark, SF_DIR).select(
+        F.col("src").alias("s"), F.col("dst").alias("d"), "w"
     )
-    dist0 = nodes0.where(F.col("node") % 97 == 0).withColumn(
-        "dist", F.lit(0.0)
-    )
-    relaxed = (
-        ew.join(dist0.withColumnRenamed("node", "src"), "src")
-        .select(F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"))
-    )
-    one_round = (
-        dist0.unionByName(relaxed).groupBy("node")
-        .agg(F.min("dist").alias("dist"))
-    )
-    p = plan_of(one_round)
+    dist0 = seeds0.withColumn("dist", F.lit(0.0))
+    p = plan_of(sssp_round(ew, dist0))
     sections.append(("kg_sssp single relaxation round (join + min agg)", p))
     check("kg_sssp: no cartesian product", "CartesianProduct" not in p)
     check(

@@ -187,9 +187,10 @@ def test_kcore_empty_and_full(spark):
     # a path has no 2-core (endpoints peel until nothing is left)
     path = _edges(spark, [(1, 2), (2, 3), (3, 4)])
     assert kcore(path, k=2).count() == 0
-    # K4 is its own 3-core
+    # K4 is its own 3-core: round 1 removes nothing, which is convergence
+    # (the kcore_15 oracle's unrolled rounds count the same way)
     k4 = _edges(spark, [(a, b) for a in range(1, 5) for b in range(a + 1, 5)])
-    got = rows_set(kcore(k4, k=3), "node", "core_deg")
+    got = rows_set(kcore(k4, k=3, max_rounds=1), "node", "core_deg")
     assert got == {(1, 3), (2, 3), (3, 3), (4, 3)}
 
 
@@ -200,6 +201,12 @@ def test_kcore_round_bound_is_loud(spark):
     e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)])
     with pytest.raises(GraphStatsError):
         kcore(e, k=2, max_rounds=1)
+    # the bound at its edge: a 3-path with k=2 loses both edges in round
+    # 1 and round 2 finds none removed, so its empty core needs 2 rounds
+    path_3 = _edges(spark, [(1, 2), (2, 3)])
+    assert kcore(path_3, k=2, max_rounds=2).count() == 0
+    with pytest.raises(GraphStatsError):
+        kcore(path_3, k=2, max_rounds=1)
 
 
 def test_clustering_coefficient(spark):
@@ -585,6 +592,17 @@ def test_weighted_distances_hand_traced(spark):
     got = {r["node"]: r["dist"] for r in
            weighted_distances(e, seeds, max_hops=6).collect()}
     assert got == {1: 0.0, 2: 2.0, 3: 1.0}
+    # the loop keeps going while distances improve: round 3 improves
+    # node 2 (10 -> 3 via 1-3-4-2) without reaching a new node, and only
+    # round 4 carries that to node 5 (11 -> 4); a probe that stops when
+    # no new node is reached returns 5: 11
+    e = spark.createDataFrame(
+        [(1, 2, 10.0), (2, 5, 1.0), (1, 3, 1.0), (3, 4, 1.0), (4, 2, 1.0)],
+        "src bigint, dst bigint, w double",
+    )
+    got = {r["node"]: r["dist"] for r in
+           weighted_distances(e, seeds, max_hops=6).collect()}
+    assert got == {1: 0.0, 2: 3.0, 3: 1.0, 4: 2.0, 5: 4.0}
 
 
 def test_weighted_distances_hop_bound(spark):
