@@ -31,8 +31,8 @@ query text), so it is collected to the driver once — with a loud guard
 each constraint becomes a Catalyst filter/join/aggregate on the
 distributed table and the *bounded* per-shape results are unioned.  No
 Python runs per data row.  The rdfs:subClassOf closure needed for
-SHACL-instance semantics is a bounded iterative join fixpoint over the
-(tiny) subclass relation, same kernel as the mapping closure.
+SHACL-instance semantics is ``rules.transitive_closure`` over the
+(tiny) subclass relation.
 
 Violation rows: (shape, focus, path, component, value) — one row per
 offending value node for value constraints, one row per focus node for
@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import (
+    NUMERIC_TYPES,
     XSD_BOOLEAN,
     XSD_DECIMAL,
     XSD_DOUBLE,
@@ -55,7 +56,7 @@ from ..model import (
     XSD_INTEGER_TYPES,
     XSD_STRING,
 )
-from .rules import fixpoint
+from .rules import FixpointNotConverged, transitive_closure
 
 SH = "http://www.w3.org/ns/shacl#"
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -161,34 +162,21 @@ def _rdf_list(spo, head_term):
 
 
 def _subclass_closure(data: DataFrame, max_rounds: int = 20) -> DataFrame:
-    """Transitive (non-reflexive) rdfs:subClassOf pairs (sub, sup) from
-    the data graph — doubling-free semi-naive ``rules.fixpoint``; the
-    subclass relation of a real KG is ontology-sized, so each round is a
-    small join."""
-    base = (
-        data.where(
-            (F.col("p") == RDFS_SUBCLASS) & (F.col("o_kind") == "iri")
-        )
-        .select(F.col("s").alias("sub"), F.col("o_value").alias("sup"))
-        .where(F.col("sub") != F.col("sup"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-
-    def rule(delta: DataFrame, _all: DataFrame, _i: int) -> DataFrame:
-        return (
-            delta.withColumnRenamed("sup", "mid")
-            .join(base.withColumnRenamed("sub", "mid"), "mid")
-            .select("sub", "sup")
-            .where(F.col("sub") != F.col("sup"))
-        )
-
-    closure, converged = fixpoint(base, rule, max_rounds)
-    if not converged:
+    """Transitive rdfs:subClassOf pairs (sub, sup) from the data graph:
+    ``rules.transitive_closure`` over the (sub, sup) edges; the subclass
+    relation of a real KG is ontology-sized, so each round is a small
+    join. A cycle or self-loop adds reflexive pairs, which ``_instances``
+    ignores (a class is always in its own class set)."""
+    edges = data.where(
+        (F.col("p") == RDFS_SUBCLASS) & (F.col("o_kind") == "iri")
+    ).select(F.col("s").alias("src"), F.col("o_value").alias("dst"))
+    try:
+        reach = transitive_closure(edges, max_rounds)
+    except FixpointNotConverged as exc:
         raise ShaclUnsupported(
             f"rdfs:subClassOf closure did not converge in {max_rounds} rounds"
-        )
-    return closure
+        ) from exc
+    return reach.select(F.col("src").alias("sub"), F.col("dst").alias("sup"))
 
 
 def _instances(data: DataFrame, closure: DataFrame, cls: str) -> DataFrame:
@@ -335,9 +323,6 @@ _KNOWN_PARAMS = {
     SH + "lessThanOrEquals",
 }
 
-#: numeric datatype IRIs for the SPARQL-operator comparison used by
-#: sh:lessThan / sh:lessThanOrEquals
-_NUMERIC_DTS = set(XSD_INTEGER_TYPES) | {XSD_DECIMAL, XSD_DOUBLE, XSD_FLOAT}
 #: integer/decimal pairs (XSD_INTEGER_TYPES includes xsd:decimal)
 #: compare in this type: exact to 20 integer and 18 fractional digits,
 #: where double rounds integers past 2^53
@@ -704,8 +689,8 @@ def _property_violations(data, closure, spo, shape, pshape, focus):
             pairs = vals.join(_other_values(v), "focus")
             vdt = F.coalesce("v_datatype", F.lit(""))
             num_ok = (
-                vdt.isin(*_NUMERIC_DTS)
-                & F.col("w_datatype").isin(*_NUMERIC_DTS)
+                vdt.isin(*NUMERIC_TYPES)
+                & F.col("w_datatype").isin(*NUMERIC_TYPES)
                 & F.col("v_value").try_cast("double").isNotNull()
                 & F.col("w_value").try_cast("double").isNotNull()
             )

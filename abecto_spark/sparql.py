@@ -124,7 +124,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .model import RDF_LANG_STRING, XSD, XSD_STRING
+from .model import NUMERIC_TYPES, RDF_LANG_STRING, XSD, XSD_STRING
 from .operators.rules import fixpoint
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -2278,18 +2278,10 @@ def _term_tuple(term) -> tuple:
 
 # -- expression compilation --------------------------------------------
 
-_NUMERIC_DTS = tuple(
-    XSD + n
-    for n in ("integer", "decimal", "float", "double", "long", "int", "short", "byte",
-              "nonNegativeInteger", "positiveInteger", "negativeInteger",
-              "nonPositiveInteger", "unsignedLong", "unsignedInt", "unsignedShort",
-              "unsignedByte")
-)
-
 
 def _is_numeric_expr(e) -> bool:
     if isinstance(e, Lit):
-        return e.datatype in _NUMERIC_DTS
+        return e.datatype in NUMERIC_TYPES
     if isinstance(e, Op):
         return e.op in ("+", "-", "*", "/", "neg")
     if isinstance(e, Call):
@@ -2537,7 +2529,7 @@ def _compile_call(e: Call, bound: set[str]) -> Column:
         t = _term_of(a[0], bound)
         return F.coalesce(
             (t["kind"] == "literal")
-            & t["datatype"].isin(list(_NUMERIC_DTS))
+            & t["datatype"].isin(list(NUMERIC_TYPES))
             & t["value"].try_cast("double").isNotNull(),
             F.lit(False),
         )
@@ -2617,7 +2609,7 @@ def _ebv(e, bound: set[str]) -> Column:
     if isinstance(e, Lit):
         if e.datatype == XSD + "boolean":
             return F.lit(e.lex == "true")
-        if e.datatype in _NUMERIC_DTS:
+        if e.datatype in NUMERIC_TYPES:
             return F.lit(float(e.lex) != 0)
         return F.lit(len(e.lex) > 0)
     if isinstance(e, Var):
@@ -2625,7 +2617,7 @@ def _ebv(e, bound: set[str]) -> Column:
         return F.when(
             t["datatype"] == XSD + "boolean", t["value"] == "true"
         ).when(
-            t["datatype"].isin(list(_NUMERIC_DTS)),
+            t["datatype"].isin(list(NUMERIC_TYPES)),
             F.coalesce(t["value"].try_cast("double") != 0, F.lit(False)),
         ).otherwise(F.length(t["value"]) > 0)
     if isinstance(e, Op) and e.op in ("||", "&&", "!"):
@@ -2638,7 +2630,7 @@ def _ebv(e, bound: set[str]) -> Column:
 
 def _term_eq(left, right, bound: set[str]) -> Column:
     lt, rt = _term_of(left, bound), _term_of(right, bound)
-    nums = list(_NUMERIC_DTS)
+    nums = list(NUMERIC_TYPES)
 
     def is_num(t):
         return (t["kind"] == "literal") & t["datatype"].isin(nums)
@@ -2748,7 +2740,7 @@ def _agg_col(a: Agg, bound: set[str]) -> Column:
     if a.fn in ("MIN", "MAX"):
         t = compile_expr_term(a.arg, bound)
         num = F.when(
-            (t["kind"] == "literal") & t["datatype"].isin(list(_NUMERIC_DTS)),
+            (t["kind"] == "literal") & t["datatype"].isin(list(NUMERIC_TYPES)),
             t["value"].cast("double"),
         )
         key = F.struct(num.isNull().cast("int"), num, t["value"])
@@ -2920,7 +2912,7 @@ def _order_keys(order: list, bound: set[str]) -> list[Column]:
                 )
             t = F.col(expr.name)
             num = F.when(
-                (t["kind"] == "literal") & t["datatype"].isin(list(_NUMERIC_DTS)),
+                (t["kind"] == "literal") & t["datatype"].isin(list(NUMERIC_TYPES)),
                 t["value"].cast("double"),
             )
             parts = [num, t["value"]]

@@ -31,6 +31,25 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def checkpoint_plans(spark, run):
+    """``run()``'s result and the plans of the frames it hands to
+    ``localCheckpoint``, in call order: a loop's own round, before the
+    checkpoint cuts its lineage."""
+    frame = type(spark.range(0))
+    plans = []
+    local_checkpoint = frame.localCheckpoint
+
+    def capture(df, *args, **kwargs):
+        plans.append(plan_of(df))
+        return local_checkpoint(df, *args, **kwargs)
+
+    frame.localCheckpoint = capture
+    try:
+        return run(), plans
+    finally:
+        frame.localCheckpoint = local_checkpoint
+
+
 def main() -> int:
     from pyspark.sql import functions as F
 
@@ -73,19 +92,9 @@ def main() -> int:
     # ---- 3. JW linking: blocked join (no full cross product) ----------
     # the scored pairs are localCheckpoint-ed eagerly, so the final plan
     # starts at a scan of the checkpoint; keep the scorer's own plan too
-    frame = type(spark.range(0))
-    checkpointed = []
-    local_checkpoint = frame.localCheckpoint
-
-    def capture(df, *args, **kwargs):
-        checkpointed.append(plan_of(df))
-        return local_checkpoint(df, *args, **kwargs)
-
-    frame.localCheckpoint = capture
-    try:
-        jw = q.q_jw_linking(spark, SF_DIR)
-    finally:
-        frame.localCheckpoint = local_checkpoint
+    jw, checkpointed = checkpoint_plans(
+        spark, lambda: q.q_jw_linking(spark, SF_DIR)
+    )
     p = plan_of(jw)
     sections.append(("jw_linking (blocked similarity join)", p))
     # the candidate join runs inside DuckDB: EXPLAIN the scorer's query
@@ -521,33 +530,33 @@ def main() -> int:
 
     # ---- 8. graph analytics over the materialized KG (round 5) --------
     # the graph loops checkpoint every round, hiding the plan, so each
-    # (PageRank, k-core, LPA, BFS, SSSP) is audited on one lazy round of
-    # its own round function.
+    # (k-core, LPA, BFS, SSSP) is audited on one lazy round of its own
+    # round function, and each PageRank on the round it hands to
+    # localCheckpoint when run for one iteration.
     # pagerank: the per-iteration update must be a hash-aggregated join
     # fan-in (partial aggregation on the dst key), never a cartesian;
     # the dangling 1-row aggregate must come back via a broadcast.
     from abecto_spark.operators.graph_stats import (
         _arcs,
         _degrees,
-        _pagerank_graph,
+        _edge_graph,
         _simple_graph,
         frontier_rule,
         kcore_round,
         lpa_round,
-        pagerank_round,
+        pagerank,
+        pagerank_weighted,
+        personalized_pagerank,
         sssp_round,
         triangle_counts,
     )
 
+    def pagerank_step(run):
+        return checkpoint_plans(spark, run)[1][-1]
+
     edges = q._part_edges(spark, SF_DIR).localCheckpoint()
-    e, nodes, od = _pagerank_graph(edges, "src", "dst")
-    n = nodes.count()
-    step = pagerank_round(
-        nodes.withColumn("rank", F.lit(1.0 / n)), e, od, nodes, 0.85,
-        F.col("rank") / F.col("od"), F.lit(0.15 / n),
-        F.col("dangling") / F.lit(float(n)),
-    )
-    p = plan_of(step)
+    nodes = _edge_graph(edges, "src", "dst")[1]
+    p = pagerank_step(lambda: pagerank(edges, iterations=1))
     sections.append(("kg_pagerank single update step (shuffle on dst, broadcast dangling)", p))
     check("kg_pagerank step: no cartesian product", "CartesianProduct" not in p)
     check("kg_pagerank step: map-side partial aggregation on dst", "partial_sum" in p)
@@ -654,15 +663,7 @@ def main() -> int:
 
     # personalized_pagerank: the same round with the reset-vector
     # restart and teleport; the dangling 1-row aggregate must broadcast
-    rv = nodes.join(
-        seeds0.withColumn("_r", F.lit(0.5)), "node", "left"
-    ).select("node", F.coalesce("_r", F.lit(0.0)).alias("r"))
-    ppr_step = pagerank_round(
-        rv.select("node", F.col("r").alias("rank")), e, od, rv, 0.85,
-        F.col("rank") / F.col("od"), F.lit(0.15) * F.col("r"),
-        F.col("dangling") * F.col("r"),
-    )
-    p = plan_of(ppr_step)
+    p = pagerank_step(lambda: personalized_pagerank(edges, seeds0, iterations=1))
     sections.append(("kg_ppr single update step (reset-vector multiply, broadcast dangling)", p))
     check("kg_ppr step: no cartesian product", "CartesianProduct" not in p)
     check("kg_ppr step: map-side partial aggregation on dst", "partial_sum" in p)
@@ -702,15 +703,9 @@ def main() -> int:
 
     # pagerank_weighted: the same round over the weighted edge table —
     # weighted inflow must partially aggregate on dst like the unweighted
-    we, wnodes, wod = _pagerank_graph(
-        edges.withColumn("w", F.lit(2.0)), "src", "dst", "w"
+    p = pagerank_step(
+        lambda: pagerank_weighted(edges.withColumn("w", F.lit(2.0)), iterations=1)
     )
-    wstep = pagerank_round(
-        wnodes.withColumn("rank", F.lit(1.0 / n)), we, wod, wnodes, 0.85,
-        F.col("rank") * F.col("w") / F.col("od"), F.lit(0.15 / n),
-        F.col("dangling") / F.lit(float(n)),
-    )
-    p = plan_of(wstep)
     sections.append(("kg_wpr single update step (weighted inflow on dst)", p))
     check("kg_wpr step: no cartesian product", "CartesianProduct" not in p)
     check("kg_wpr step: map-side partial aggregation on dst", "partial_sum" in p)

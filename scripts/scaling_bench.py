@@ -4,8 +4,9 @@
 The rule's criterion (≥0.8 throughput scaling efficiency between N and 4N
 executors) cannot use a real cluster in this sandbox, so this runs the
 SAME KG pipeline on the SAME input at local[N] and local[4N] (default
-8 → 32 cores) in separate subprocesses and reports throughput at both plus
-``eff = (thr_4N / thr_N) / 4`` into BENCH/BASELINE.md.
+8 → 32 cores) in separate subprocesses, twice each, interleaved, and
+appends the faster run per level plus ``eff = (thr_4N / thr_N) / 4`` as
+one line to BENCH/pairings.jsonl. Each run is ``bench.run_pipeline``.
 
 Usage:  python scripts/scaling_bench.py [--docs 200000] [--n 8]
 Child:  invoked with ABECTO_SCALE_CORES set; prints one JSON line.
@@ -23,13 +24,12 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def child(cores: int, n_docs: int, docs_path: str) -> None:
-    sys.path.insert(0, REPO)
-    from abecto_spark.plans.pipeline import DocsPipeline, PipelineConfig
     from abecto_spark.session import get_spark
-    from abecto_spark.sources.checkpoint import SnapshotStore
+    from bench import run_pipeline
 
     spark = get_spark(
         app_name=f"abecto_scale_{cores}",
@@ -43,38 +43,14 @@ def child(cores: int, n_docs: int, docs_path: str) -> None:
     # warmup: spin up the python-worker pool, codegen and shuffle paths on
     # a small slice so the timed run measures steady-state throughput (a
     # long-lived cluster pays these once, not per job)
-    warm_snap = tempfile.mkdtemp(prefix=f"abecto_warm_{cores}_")
-    try:
-        warm_docs = spark.read.parquet(docs_path).limit(5000).localCheckpoint(eager=True)
-        DocsPipeline(spark, SnapshotStore(spark, warm_snap), PipelineConfig()).run(
-            warm_docs, resume=False
-        )
-    finally:
-        shutil.rmtree(warm_snap, ignore_errors=True)
-
-    snap = tempfile.mkdtemp(prefix=f"abecto_scale_{cores}_")
-    try:
-        store = SnapshotStore(spark, snap)
-        pipe = DocsPipeline(spark, store, PipelineConfig())
-        t0 = time.time()
-        result = pipe.run(docs, resume=False)
-        elapsed = time.time() - t0
-        print(
-            json.dumps(
-                {
-                    "cores": cores,
-                    "elapsed_sec": round(elapsed, 3),
-                    "docs_per_sec": round(n_docs / elapsed, 2),
-                    "triples": result.metrics["s4_triples"]["row_count"],
-                }
-            )
-        )
-    finally:
-        shutil.rmtree(snap, ignore_errors=True)
+    run_pipeline(spark, docs.limit(5000).localCheckpoint(eager=True))
+    got = run_pipeline(spark, docs)
+    print(json.dumps(dict(
+        got, cores=cores, docs_per_sec=round(n_docs / got["elapsed_sec"], 2)
+    )))
 
 
-def parent(n: int, n_docs: int, write_md: bool = False) -> None:
-    sys.path.insert(0, REPO)
+def parent(n: int, n_docs: int) -> None:
     from abecto_spark.session import get_spark
     from abecto_spark.sources.docs import synth_docs
 
@@ -84,13 +60,10 @@ def parent(n: int, n_docs: int, write_md: bool = False) -> None:
                partitions=64).write.parquet(docs_path)
     spark.stop()
 
-    # Interleave repeated runs and keep the fastest per level: the host is
-    # shared (exogenous load drifts timings ±30% across an hour), and
-    # best-of-N measures the engine's capability rather than whichever
-    # noise burst a single run landed in.
-    repeats = int(os.environ.get("ABECTO_SCALE_REPEATS", 2))
+    # two interleaved runs per level, the faster kept (as bench.py's
+    # best-of-2), so both levels see the same host drift
     results: dict = {}
-    for r in range(repeats):
+    for r in range(2):
         for cores in (n, 4 * n):
             env = dict(os.environ, ABECTO_SCALE_CORES=str(cores),
                        ABECTO_SCALE_DOCS=str(n_docs), ABECTO_SCALE_PATH=docs_path)
@@ -103,84 +76,21 @@ def parent(n: int, n_docs: int, write_md: bool = False) -> None:
             print(f"run {r} local[{cores}]: {got}")
             if cores not in results or got["elapsed_sec"] < results[cores]["elapsed_sec"]:
                 results[cores] = got
-    for cores in (n, 4 * n):
-        print(f"best local[{cores}]: {results[cores]}")
+    shutil.rmtree(os.path.dirname(docs_path), ignore_errors=True)
 
     thr_n = results[n]["docs_per_sec"]
     thr_4n = results[4 * n]["docs_per_sec"]
     eff = (thr_4n / thr_n) / 4 if thr_n else 0.0
-
-    md = f"""# BENCH/BASELINE — scaling evidence (north rule)
-
-Same KG-construction pipeline (S1 extract → S2 JW link → S3 CC → S4
-triples → S5 measures), same pre-materialized input ({n_docs:,} synthetic
-interleaved docs, seed 42), run at two parallelism levels in separate
-JVMs — the sandbox proxy for the N vs 4N executor criterion
-(no real cluster available here; see BASELINE.md §2).
-
-| parallelism | elapsed (s) | throughput (docs/sec) | triples |
-|---|---|---|---|
-| local[{n}] | {results[n]['elapsed_sec']} | {thr_n} | {results[n]['triples']} |
-| local[{4 * n}] | {results[4 * n]['elapsed_sec']} | {thr_4n} | {results[4 * n]['triples']} |
-
-**Scaling efficiency** `eff = (thr_{4 * n} / thr_{n}) / 4` = **{eff:.3f}**
-(target ≥ 0.8 on a real cluster; single-host local mode shares one memory
-bus + disk, so this is a lower bound for true multi-executor scaling).
-
-Environment: single host, {os.cpu_count()} logical CPUs, Spark local mode,
-AQE on, shuffle partitions = max(cores, 8) (a floor so the 2-core level
-is not starved of AQE coalescing room). Reported numbers are the best of
-{os.environ.get("ABECTO_SCALE_REPEATS", "2")} interleaved runs per level —
-the host is shared and exogenous load drifts single-run timings by up to
-~30%, so best-of-N measures the engine, not the neighbors.
-
-## Measurement notes
-
-- **Choice of N={n}.** The rule allows "N and 4N cores". On this single
-  host, a pure-CPU capacity probe (N busy processes, no Spark) measures
-  the machine's own parallel ceiling: 4→16 processes scale at ~0.88
-  efficiency (SMT + shared memory bus), so N=4 compares the engine
-  against headroom the hardware actually has.
-- **Warmup:** each child runs a 5k-doc pipeline before timing so the
-  measured run is steady-state (python-worker pool, codegen, shuffle
-  services are warm — a long-lived cluster pays these once, not per job).
-- **Per-stage scaling** (per-stage spans of a traced
-  `python3 perfbench/run.py --workload link --trace 1` run):
-  the dominant S2 scoring stage scales at ~0.9 between the two levels;
-  the residual gap is fixed seconds in the short S1/S3/S4/S5 stages
-  (snapshot commits, driver CC, small-data shuffle rounds) that amortize
-  away as the input grows toward the 10^12-doc design point.
-- **Throughput journey** (1M-doc input, local[32]): ~1,450 docs/s →
-  ~22,000 docs/s across rounds via the AQE coalescing floor fix,
-  in-task DuckDB bucket scoring, salted triangle join for oversized
-  buckets, value-level connected components, convergence check folded
-  into the CC aggregation, parquet-footer lineage, and (this round) a
-  numpy scatter-min driver CC + one-shuffle canonical assignment.
-"""
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    # Always append the raw pairing to an audit log; BENCH/BASELINE.md is
-    # hand-curated (pairing history + adjudications), so only overwrite it
-    # on explicit request — an unattended run must never wipe the curation.
     log_path = os.path.join(REPO, "BENCH", "pairings.jsonl")
+    os.makedirs(os.path.dirname(log_path), exist_ok=True)
     with open(log_path, "a") as fh:
-        fh.write(
-            json.dumps(
-                {
-                    "ts": time.time(),
-                    "n_docs": n_docs,
-                    "levels": {str(c): results[c] for c in (n, 4 * n)},
-                    "eff": round(eff, 3),
-                }
-            )
-            + "\n"
-        )
+        fh.write(json.dumps({
+            "ts": time.time(),
+            "n_docs": n_docs,
+            "levels": {str(c): results[c] for c in (n, 4 * n)},
+            "eff": round(eff, 3),
+        }) + "\n")
     print(f"appended pairing to {log_path}; efficiency={eff:.3f}")
-    if write_md:
-        out_path = os.path.join(REPO, "BENCH", "BASELINE.md")
-        with open(out_path, "w") as fh:
-            fh.write(md)
-        print(f"wrote {out_path}")
-    shutil.rmtree(os.path.dirname(docs_path), ignore_errors=True)
 
 
 if __name__ == "__main__":
@@ -194,11 +104,5 @@ if __name__ == "__main__":
         ap = argparse.ArgumentParser()
         ap.add_argument("--docs", type=int, default=200_000)
         ap.add_argument("--n", type=int, default=8)
-        ap.add_argument(
-            "--write-md",
-            action="store_true",
-            help="overwrite the hand-curated BENCH/BASELINE.md (default: "
-            "only append the pairing to BENCH/pairings.jsonl)",
-        )
         a = ap.parse_args()
-        parent(a.n, a.docs, write_md=a.write_md)
+        parent(a.n, a.docs)
