@@ -101,10 +101,10 @@ def connected_components(
         # body is numpy, not a per-edge interpreter loop.
         #
         # Factorize over UTF-8 BYTES: pandas' string hash table follows
-        # C-string semantics and collapses values at the first NUL byte —
-        # the star-mode synthetic nodes ('\\x00jw…') would all become one
-        # node and merge every cluster. Bytes objects hash length-aware,
-        # and UTF-8 byte order == codepoint order, so min-reps transfer.
+        # C-string semantics and collapses values at the first NUL byte,
+        # so two ids that differ only after a NUL would become one node
+        # and merge their clusters. Bytes objects hash length-aware, and
+        # UTF-8 byte order == codepoint order, so min-reps transfer.
         pdf = sym.toPandas()  # Arrow transfer
         enc = np.concatenate([
             pdf["src"].str.encode("utf-8").to_numpy(),
@@ -269,18 +269,6 @@ def canonical_from_value_links(
     )
 
 
-def strip_synthetic(canonical: DataFrame, prefix: str = "\x00") -> DataFrame:
-    """Drop synthetic star nodes (see jw_mapping star mode) from a CC
-    result and re-elect each component's representative as the smallest
-    *real* member, preserving the reference's group-representative
-    convention (`Processor.java:216-218`)."""
-    real = canonical.where(~F.col("resource").startswith(prefix))
-    rep = real.groupBy("canonical_id").agg(F.min("resource").alias("rep"))
-    return real.join(rep, "canonical_id").select(
-        "resource", F.col("rep").alias("canonical_id")
-    )
-
-
 def canonicalize(resources: DataFrame, canonical: DataFrame, col: str = "resource") -> DataFrame:
     """Attach ``canonical_id`` (falling back to the resource itself for
     singletons) to any table with a resource column."""
@@ -319,8 +307,8 @@ class MappingGraph:
     Usage::
 
         g = MappingGraph(spark)
-        g.add_incorrespondences(manual_exclusions)   # earlier step wins
-        g.add_correspondences(jw_edges)              # vetoed vs exclusions
+        g.add_incorrespondences(curated_incorr)      # earlier step wins
+        g.add_correspondences(jw_edges)              # vetoed vs incorr
         canonical = g.canonical()                    # (resource, canonical_id)
     """
 

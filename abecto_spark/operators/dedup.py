@@ -601,21 +601,37 @@ def repeated_span_dedup(
     deletes a non-duplicated span — acceptable for corpus curation, and
     the reason production dedup pipelines ship the same trade.
     """
+    return _excise_spans(docs, id_col, text_col, int(window_tokens))[0]
+
+
+def _excise_spans(
+    docs: DataFrame, id_col: str, text_col: str, k: int, seen: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """The span-excision body of ``repeated_span_dedup`` and
+    ``incremental_span_dedup``: every ``k``-token window that is not the
+    first (id, position) occurrence of its fingerprint — or, with
+    ``seen``, whose fingerprint is in that store — has its span deleted,
+    and each document reassembles from its surviving tokens. Returns
+    ``(admitted, first)``: (id, text) rows and the first-occurrence
+    (fp, first) rows."""
     toks = docs.select(
         F.col(id_col).alias("_id"), _tokens(F.col(text_col)).alias("toks")
     )
-    k = int(window_tokens)
     win = _span_windows(toks, k)
     first = win.groupBy("fp").agg(F.min(F.struct("_id", "pos")).alias("first"))
-    covered = (
+    dup = (
         win.join(first, "fp")
         .where(~((F.col("_id") == F.col("first._id")) & (F.col("pos") == F.col("first.pos"))))
-        .select("_id", F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(k - 1))).alias("i"))
-        .distinct()
+        .select("_id", "pos")
     )
+    if seen is not None:
+        dup = dup.unionByName(win.join(seen.select("fp"), "fp", "left_semi").select("_id", "pos"))
+    covered = dup.select(
+        "_id", F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(k - 1))).alias("i")
+    ).distinct()
     tok_rows = toks.select("_id", F.posexplode("toks").alias("i", "tok"))
     kept = tok_rows.join(covered, ["_id", "i"], "left_anti")
-    return kept.groupBy("_id").agg(
+    admitted = kept.groupBy("_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("i", "tok"))),
@@ -624,6 +640,7 @@ def repeated_span_dedup(
             " ",
         ).alias("text")
     ).withColumnRenamed("_id", id_col)
+    return admitted, first
 
 
 def incremental_span_dedup(
@@ -655,47 +672,6 @@ def incremental_span_dedup(
     first-occurrence on the 8-byte fingerprint, (id, position) anti-join)
     plus one semi/anti join pair against the store — |store| is total
     corpus windows, 8 bytes each, never the text."""
-    k = int(window_tokens)
-    toks = batch.select(
-        F.col(id_col).alias("_id"), _tokens(F.col(text_col)).alias("toks")
-    )
-    win = _span_windows(toks, k)
-    first = win.groupBy("fp").agg(F.min(F.struct("_id", "pos")).alias("first"))
-    dup_in_batch = (
-        win.join(first, "fp")
-        .where(
-            ~(
-                (F.col("_id") == F.col("first._id"))
-                & (F.col("pos") == F.col("first.pos"))
-            )
-        )
-        .select("_id", "pos")
-    )
-    dup_vs_store = win.join(seen.select("fp"), "fp", "left_semi").select("_id", "pos")
-    covered = (
-        dup_in_batch.unionByName(dup_vs_store)
-        .select(
-            "_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + F.lit(k - 1))
-            ).alias("i"),
-        )
-        .distinct()
-    )
-    tok_rows = toks.select("_id", F.posexplode("toks").alias("i", "tok"))
-    kept = tok_rows.join(covered, ["_id", "i"], "left_anti")
-    admitted = (
-        kept.groupBy("_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "tok"))),
-                    lambda x: x["tok"],
-                ),
-                " ",
-            ).alias("text")
-        )
-        .withColumnRenamed("_id", id_col)
-    )
+    admitted, first = _excise_spans(batch, id_col, text_col, int(window_tokens), seen)
     new_fps = first.select("fp").join(seen.select("fp"), "fp", "left_anti")
     return admitted, new_fps

@@ -35,8 +35,6 @@ from pyspark.sql import functions as F
 
 from .salting import salted_triangle
 
-SYNTHETIC_PREFIX = "\x00jw:"  # sorts before any real resource id
-
 _SCORED_SCHEMA = (
     "d1 string, variable string, v1 string, d2 string, v2 string, score double"
 )
@@ -166,7 +164,6 @@ def jw_mapping(
     threshold: float,
     case_sensitive: bool = False,
     block: str = "grams",
-    star: bool = False,
     return_value_links: bool = False,
 ) -> DataFrame:
     """Correspondence edges (src, dst) from JW linking over all unordered
@@ -209,34 +206,6 @@ def jw_mapping(
         # matched value pairs, pre-resource-fan-out: the input to
         # value-level canonicalization (closure.canonical_from_value_links)
         return bidi.select("d1", "variable", "v1", "d2", "v2", "score")
-
-    if star:
-        # Scale path: hot values fan out to thousands of resources; the
-        # pairwise cross product (`JaroWinklerMappingProcessor.java:100-104`)
-        # is quadratic per matched value. Linking every resource to a
-        # synthetic node per matched value pair yields IDENTICAL connected
-        # components with linear edge count (SURVEY.md §2.1: "closure never
-        # needs materializing as O(n²) pairs"). Strip the synthetic nodes
-        # with closure.strip_synthetic after CC.
-        pairnode = F.concat_ws(
-            "\x1f", F.lit(SYNTHETIC_PREFIX.rstrip(":")), "variable", "d1", "v1", "d2", "v2"
-        )
-        bidi_n = bidi.withColumn("pn", pairnode)
-        r1 = idx.select(
-            F.col("dataset").alias("d1"), "variable", F.col("value").alias("v1"),
-            F.col("resource").alias("src"),
-        )
-        r2 = idx.select(
-            F.col("dataset").alias("d2"), "variable", F.col("value").alias("v2"),
-            F.col("resource").alias("src"),
-        )
-        e1 = bidi_n.join(r1, ["d1", "variable", "v1"]).select(
-            "src", F.col("pn").alias("dst")
-        )
-        e2 = bidi_n.join(r2, ["d2", "variable", "v2"]).select(
-            "src", F.col("pn").alias("dst")
-        )
-        return e1.unionByName(e2).distinct()
 
     r1 = idx.select(
         F.col("dataset").alias("d1"),

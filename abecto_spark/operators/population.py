@@ -13,7 +13,8 @@ one aggregate over ``(canonical_id, dataset) → member count``:
   absoluteCoveredness(d)= #groups with cnt_d>0 and ≥2 datasets (`:141-155`)
   relativeCoverage/Coveredness, marCompletenessThomas08: scale-16 HALF_UP
   decimal arithmetic on the collected (≤|datasets|²) aggregate rows
-  (`measure/RelativeCoverage.java`, `measure/Completeness.java:38-85`).
+  (`measure/RelativeCoverage.java`, `measure/Completeness.java:38-85`),
+  in ``measure_rows`` — shared with property comparison.
 
 Findings:
   resource_omission — per group × absent dataset × present member
@@ -39,6 +40,7 @@ from ..model import (
     M_DUP_COUNT,
     M_REL_COVERAGE,
     M_REL_COVEREDNESS,
+    MEASURES_SCHEMA,
 )
 
 _SCALE = Decimal("1E-16")
@@ -46,6 +48,59 @@ _SCALE = Decimal("1E-16")
 
 def _div16(a: Decimal, b: Decimal) -> Decimal:
     return (a / b).quantize(_SCALE, rounding=ROUND_HALF_UP).normalize()
+
+
+def measure_rows(
+    aspect: str,
+    variable: str | None,
+    datasets: list[str],
+    count: dict[str, int],
+    dedup: dict[str, int],
+    covered: dict[str, int],
+    pair_coverage: dict[tuple[str, str], int],
+) -> list[tuple]:
+    """The eight measures of one aspect (and variable) as MEASURES_SCHEMA
+    rows — the decimal epilogue population and property comparison share
+    (the reference's ``measure/`` classes, BigDecimalMeasure scale 16,
+    HALF_UP).
+
+    ``datasets`` sorted; ``count``/``dedup``/``covered`` per dataset
+    (duplicateCount = count − dedup); ``pair_coverage`` per sorted pair
+    (d1 < d2). Relative measures are skipped where the divisor's
+    deduplicated count is 0, completeness where the total overlap is 0.
+    """
+    rows = []
+
+    def add(measure, dataset, compared_to, value):
+        rows.append(
+            (measure, aspect, variable, dataset, sorted(compared_to), Decimal(value))
+        )
+
+    for d in datasets:
+        others = [x for x in datasets if x != d]
+        add(M_COUNT, d, [], count[d])
+        add(M_DEDUP_COUNT, d, [], dedup[d])
+        add(M_DUP_COUNT, d, [], count[d] - dedup[d])
+        add(M_ABS_COVEREDNESS, d, others, covered[d])
+        if dedup[d] != 0:
+            add(M_REL_COVEREDNESS, d, others, _div16(Decimal(covered[d]), Decimal(dedup[d])))
+    for (d1, d2), n in pair_coverage.items():
+        add(M_ABS_COVERAGE, d1, [d2], n)
+        add(M_ABS_COVERAGE, d2, [d1], n)
+        if dedup[d2] != 0:
+            add(M_REL_COVERAGE, d1, [d2], _div16(Decimal(n), Decimal(dedup[d2])))
+        if dedup[d1] != 0:
+            add(M_REL_COVERAGE, d2, [d1], _div16(Decimal(n), Decimal(dedup[d1])))
+
+    # mark-and-recapture completeness (Thomas 2008, `measure/Completeness.java`)
+    total_overlap = sum(pair_coverage.values())
+    if total_overlap != 0:
+        est = sum(Decimal(dedup[d1]) * Decimal(dedup[d2]) for d1, d2 in pair_coverage)
+        est = (est / Decimal(total_overlap)).quantize(_SCALE, rounding=ROUND_HALF_UP)
+        for d in datasets:
+            others = [x for x in datasets if x != d]
+            add(M_COMPLETENESS, d, others, _div16(Decimal(dedup[d]), est))
+    return rows
 
 
 def population_comparison(
@@ -118,49 +173,10 @@ def population_comparison(
     abscov = {p: int(agg_row.get(f"pair__{p[0]}__{p[1]}", 0) or 0) for p in pairs}
     dedup = {d: counts[d] - dup[d] for d in datasets}
 
-    # ---- driver-side decimal epilogue (matches BigDecimalMeasure scale 16)
-    rows = []
-
-    def add(measure, dataset, compared_to, value, variable=None):
-        rows.append(
-            (
-                measure,
-                aspect,
-                variable,
-                dataset,
-                sorted(compared_to),
-                Decimal(value),
-            )
-        )
-
-    for d in datasets:
-        add(M_COUNT, d, [], counts[d])
-        add(M_DEDUP_COUNT, d, [], dedup[d])
-        add(M_DUP_COUNT, d, [], dup[d])
-        others = [x for x in datasets if x != d]
-        add(M_ABS_COVEREDNESS, d, others, covness[d])
-        if dedup[d] != 0:
-            add(M_REL_COVEREDNESS, d, others, _div16(Decimal(covness[d]), Decimal(dedup[d])))
-    for d1, d2 in pairs:
-        add(M_ABS_COVERAGE, d1, [d2], abscov[(d1, d2)])
-        add(M_ABS_COVERAGE, d2, [d1], abscov[(d1, d2)])
-        if dedup[d2] != 0:
-            add(M_REL_COVERAGE, d1, [d2], _div16(Decimal(abscov[(d1, d2)]), Decimal(dedup[d2])))
-        if dedup[d1] != 0:
-            add(M_REL_COVERAGE, d2, [d1], _div16(Decimal(abscov[(d1, d2)]), Decimal(dedup[d1])))
-
-    # mark-and-recapture completeness (Thomas 2008, `measure/Completeness.java`)
-    total_overlap = sum(abscov.values())
-    if total_overlap != 0:
-        est = sum(Decimal(dedup[d1]) * Decimal(dedup[d2]) for d1, d2 in pairs)
-        est = (est / Decimal(total_overlap)).quantize(_SCALE, rounding=ROUND_HALF_UP)
-        for d in datasets:
-            others = [x for x in datasets if x != d]
-            add(M_COMPLETENESS, d, others, _div16(Decimal(dedup[d]), est))
-
-    from ..model import MEASURES_SCHEMA
-
-    measures = spark.createDataFrame(rows, MEASURES_SCHEMA)
+    measures = spark.createDataFrame(
+        measure_rows(aspect, None, datasets, counts, dedup, covness, abscov),
+        MEASURES_SCHEMA,
+    )
 
     # ---- findings -------------------------------------------------------
     # members per group per dataset (long)

@@ -24,12 +24,12 @@ Semantics mapping (SURVEY.md §2.1):
     emits same-dataset findings twice (its (a,b)/(b,a) double loop creates
     two annotation instances); this engine emits each directed finding
     once.
-  * ratio + mark-recapture measures with scale-16 HALF_UP decimals.
+  * ratio + mark-recapture measures with scale-16 HALF_UP decimals
+    (``population.measure_rows``, one call per variable).
 """
 
 from __future__ import annotations
 
-from decimal import ROUND_HALF_UP, Decimal
 from itertools import combinations
 
 from pyspark.sql import DataFrame
@@ -37,24 +37,9 @@ from pyspark.sql import functions as F
 
 from ..functions.ceq import term_key, value_eq_key
 from ..functions.lang import lang_excluded
-from ..model import (
-    M_ABS_COVERAGE,
-    M_ABS_COVEREDNESS,
-    M_COMPLETENESS,
-    M_COUNT,
-    M_DEDUP_COUNT,
-    M_DUP_COUNT,
-    M_REL_COVERAGE,
-    M_REL_COVEREDNESS,
-    MEASURES_SCHEMA,
-)
+from ..model import MEASURES_SCHEMA
+from .population import measure_rows
 from .salting import salted_triangle
-
-_SCALE = Decimal("1E-16")
-
-
-def _div16(a: Decimal, b: Decimal) -> Decimal:
-    return (a / b).quantize(_SCALE, rounding=ROUND_HALF_UP).normalize()
 
 
 def property_comparison(
@@ -87,13 +72,6 @@ def property_comparison(
     if datasets is None:
         datasets = sorted(r[0] for r in members.select("dataset").distinct().collect())
     coverage = coverage or {v: list(datasets) for v in variables}
-    cov_pairs = {
-        v: [
-            (d1, d2)
-            for d1, d2 in combinations(sorted(coverage.get(v, [])), 2)
-        ]
-        for v in variables
-    }
 
     v = values.where(F.col("variable").isin(variables))
     # language filter: non-matching string literals are fully excluded
@@ -190,43 +168,15 @@ def property_comparison(
     }
 
     rows = []
-
-    def add(measure, variable, dataset, compared_to, value):
-        rows.append((measure, aspect, variable, dataset, sorted(compared_to), Decimal(value)))
-
     for var in variables:
         cov_ds = sorted(coverage.get(var, []))
-        nd = {d: int(nd_rows.get((var, d), 0)) for d in cov_ds}
-        dd = {d: int(dd_rows.get((var, d), 0)) for d in cov_ds}
-        dup = {d: nd[d] - dd[d] for d in cov_ds}
-        covn = {d: int(covness_rows.get((var, d), 0)) for d in cov_ds}
-        abscov = {
-            (d1, d2): int(cov_rows.get((var, d1, d2), 0)) for d1, d2 in cov_pairs[var]
-        }
-        for d in cov_ds:
-            others = [x for x in cov_ds if x != d]
-            add(M_COUNT, var, d, [], nd[d])
-            add(M_DEDUP_COUNT, var, d, [], dd[d])
-            add(M_DUP_COUNT, var, d, [], dup[d])
-            add(M_ABS_COVEREDNESS, var, d, others, covn[d])
-            if dd[d] != 0:
-                add(M_REL_COVEREDNESS, var, d, others, _div16(Decimal(covn[d]), Decimal(dd[d])))
-        for d1, d2 in cov_pairs[var]:
-            add(M_ABS_COVERAGE, var, d1, [d2], abscov[(d1, d2)])
-            add(M_ABS_COVERAGE, var, d2, [d1], abscov[(d1, d2)])
-            if dd[d2] != 0:
-                add(M_REL_COVERAGE, var, d1, [d2], _div16(Decimal(abscov[(d1, d2)]), Decimal(dd[d2])))
-            if dd[d1] != 0:
-                add(M_REL_COVERAGE, var, d2, [d1], _div16(Decimal(abscov[(d1, d2)]), Decimal(dd[d1])))
-        total_overlap = sum(abscov.values())
-        if total_overlap != 0:
-            est = sum(Decimal(dd[d1]) * Decimal(dd[d2]) for d1, d2 in cov_pairs[var])
-            est = (est / Decimal(total_overlap)).quantize(_SCALE, rounding=ROUND_HALF_UP)
-            pair_datasets = sorted({d for p in cov_pairs[var] for d in p})
-            for d in pair_datasets:
-                others = [x for x in pair_datasets if x != d]
-                add(M_COMPLETENESS, var, d, others, _div16(Decimal(dd[d]), est))
-
+        rows += measure_rows(
+            aspect, var, cov_ds,
+            {d: int(nd_rows.get((var, d), 0)) for d in cov_ds},
+            {d: int(dd_rows.get((var, d), 0)) for d in cov_ds},
+            {d: int(covness_rows.get((var, d), 0)) for d in cov_ds},
+            {p: int(cov_rows.get((var, *p), 0)) for p in combinations(cov_ds, 2)},
+        )
     measures = spark.createDataFrame(rows, MEASURES_SCHEMA)
 
     # ---------------- findings ----------------

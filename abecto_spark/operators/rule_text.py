@@ -429,6 +429,29 @@ def _bind_or_check(acc, bound, out, res):
     return acc.where(_builtin_struct(out) == res), bound
 
 
+def mint_bnodes(
+    df: DataFrame, row_vars, names, prefix: str, tag: str
+) -> DataFrame:
+    """Bind each of ``names`` to a blank node minted per row of ``df``.
+    The label is ``prefix`` + two salted 64-bit hashes (≈ a 128-bit
+    label) of ``tag + name`` and the ``row_vars`` bindings, so the same
+    match in a later fixpoint round re-mints the same bnode and the
+    anti-join dedups instead of deriving forever."""
+    row_cols = [F.col(v) for v in sorted(row_vars)]
+    for name in names:
+        t = F.lit(tag + name)
+        label = F.concat(
+            F.lit(prefix),
+            F.xxhash64(t, F.lit(1), *row_cols).cast("string"),
+            F.lit("x"),
+            F.xxhash64(t, F.lit(2), *row_cols).cast("string"),
+        )
+        df = df.withColumn(
+            name, _term_struct(F.lit("bnode"), label, F.lit(""), F.lit(""))
+        )
+    return df
+
+
 def _apply_builtins(
     comp_all: _Compiler, acc: DataFrame, bound: set[str], builtins, salt=""
 ) -> tuple[DataFrame, set[str]]:
@@ -442,24 +465,10 @@ def _apply_builtins(
     bound = set(bound)
     for bi, b in enumerate(builtins):
         if b.name == "makeTemp":
-            # deterministic per (rule, row bindings): the same match in
-            # a later round re-mints the same bnode, so the fixpoint's
-            # anti-join dedups instead of deriving forever. Two salted
-            # 64-bit hashes ≈ a 128-bit label.
-            row_cols = [F.col(v) for v in sorted(bound)]
-            for t in b.args:
-                tag = F.lit(f"{salt}/{bi}/{t.name}")
-                label = F.concat(
-                    F.lit("_:mt"),
-                    F.xxhash64(tag, F.lit(1), *row_cols).cast("string"),
-                    F.lit("x"),
-                    F.xxhash64(tag, F.lit(2), *row_cols).cast("string"),
-                )
-                acc = acc.withColumn(
-                    t.name,
-                    _term_struct(F.lit("bnode"), label, F.lit(""), F.lit("")),
-                )
-                bound.add(t.name)
+            # deterministic per (rule, row bindings)
+            names = [t.name for t in b.args]
+            acc = mint_bnodes(acc, bound, names, "_:mt", f"{salt}/{bi}/")
+            bound.update(names)
             continue
         if b.name in ("strConcat", "uriConcat"):
             ins, out = b.args[:-1], b.args[-1]
@@ -740,21 +749,8 @@ def apply_construct(
             v for v in _triple_vars(q.template)
             if v not in bound and v.startswith("__bn")
         )
-        if mint:
-            row_cols = [F.col(v) for v in sorted(bound)]
-            for v in mint:
-                tag = F.lit(f"cbn/{v}")
-                label = F.concat(
-                    F.lit("_:c"),
-                    F.xxhash64(tag, F.lit(1), *row_cols).cast("string"),
-                    F.lit("x"),
-                    F.xxhash64(tag, F.lit(2), *row_cols).cast("string"),
-                )
-                match = match.withColumn(
-                    v,
-                    _term_struct(F.lit("bnode"), label, F.lit(""), F.lit("")),
-                )
-                bound = bound | {v}
+        match = mint_bnodes(match, bound, mint, "_:c", "cbn/")
+        bound = bound | set(mint)
         for tp in q.template:
             if not _triple_vars([tp]) <= bound:
                 raise SparqlUnsupported(

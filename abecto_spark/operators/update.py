@@ -67,6 +67,7 @@ from .rule_text import (
     _denorm_triples,
     _head_rows,
     _norm_triples,
+    mint_bnodes,
 )
 
 _TRIPLES_DDL = (
@@ -508,7 +509,6 @@ def apply_update(triples: DataFrame, update_text: str) -> DataFrame:
                 # template blank nodes mint one fresh bnode per solution
                 # (§3.1.3.2) — deterministic per (var, row bindings),
                 # same convention as CONSTRUCT templates
-                imatch, ibound = match, bound
                 mint = sorted({
                     t.name
                     for _gt, tp in op.insert
@@ -516,27 +516,8 @@ def apply_update(triples: DataFrame, update_text: str) -> DataFrame:
                     if isinstance(t, Var) and t.name.startswith("__bn")
                     and t.name not in bound
                 })
-                if mint:
-                    from ..sparql import _term_struct
-
-                    row_cols = [F.col(v) for v in sorted(bound)]
-                    for v in mint:
-                        tag = F.lit(f"ubn/{v}")
-                        label = F.concat(
-                            F.lit("_:u"),
-                            F.xxhash64(tag, F.lit(1), *row_cols)
-                            .cast("string"),
-                            F.lit("x"),
-                            F.xxhash64(tag, F.lit(2), *row_cols)
-                            .cast("string"),
-                        )
-                        imatch = imatch.withColumn(
-                            v,
-                            _term_struct(
-                                F.lit("bnode"), label, F.lit(""), F.lit("")
-                            ),
-                        )
-                    ibound = bound | set(mint)
+                imatch = mint_bnodes(match, bound, mint, "_:u", "ubn/")
+                ibound = bound | set(mint)
                 ins = _quad_tmpl_rows(
                     imatch, ibound, op.insert, default_graph, graph_mode
                 )

@@ -21,11 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..model import XSD_STRING
-from ..operators.closure import (
-    MappingGraph,
-    canonical_from_value_links,
-    strip_synthetic,
-)
+from ..operators.closure import canonical_from_value_links
 from ..operators.extract import DEFAULT_RULES, MentionRule, extract_mentions, mentions_as_values
 from ..operators.jw_mapping import jw_mapping
 from ..operators.population import population_comparison
@@ -45,7 +41,6 @@ class PipelineConfig:
     block: str = "grams"
     rules: tuple[MentionRule, ...] = DEFAULT_RULES
     aspect: str = "entity"
-    exclusions: tuple[tuple[str, str], ...] = ()  # correspondsNotTo pairs
     media_features: bool = False
     media_feature_dim: int = 16
     # per-variable property measures/findings in S5 (PropertyComparison);
@@ -63,7 +58,6 @@ class PipelineConfig:
                 "case_sensitive": self.case_sensitive,
                 "block": self.block,
                 "rules": [(r.variable, r.pattern, r.group) for r in self.rules],
-                "exclusions": sorted(self.exclusions),
             },
             sort_keys=True,
         )
@@ -120,39 +114,24 @@ class DocsPipeline:
             ))
 
         # ---- S2: JW entity linking --------------------------------------
-        # Without exclusions the edge snapshot holds *value-level* links
-        # (matched string pairs, pre-resource-fan-out) — orders of
-        # magnitude smaller than resource edges and the input to the
-        # value-level canonicalization scale path. With exclusions the
-        # resource-level MappingGraph veto path runs instead.
-        value_level = not cfg.exclusions
+        # The edge snapshot holds *value-level* links (matched string
+        # pairs, pre-resource-fan-out) — orders of magnitude smaller than
+        # resource edges and the input to value-level canonicalization.
+        # Curated correspondsNot pairs are a plan concern (run_plan's
+        # MappingGraph steps), not a pipeline one.
         edges = stage("s2_edges", lambda: jw_mapping(
             values,
             list(cfg.variables),
             cfg.threshold,
             case_sensitive=cfg.case_sensitive,
             block=cfg.block,
-            star=True,  # linear edges under hot-value skew (see operator)
-            return_value_links=value_level,
+            return_value_links=True,
         ))
 
-        # ---- S3: canonicalization (CC + exclusion veto) ------------------
-        def build_canonical() -> DataFrame:
-            if value_level:
-                # value-level CC introduces no synthetic star nodes —
-                # strip_synthetic would be a no-op groupBy+join over the
-                # full canonical map, so it only runs on the star path
-                return canonical_from_value_links(
-                    edges, values, list(cfg.variables), cfg.case_sensitive
-                )
-            g = MappingGraph(self.spark)
-            g.add_incorrespondences(
-                self.spark.createDataFrame(list(cfg.exclusions), "src string, dst string")
-            )
-            g.add_correspondences(edges)
-            return strip_synthetic(g.canonical())
-
-        canonical = stage("s3_canonical", build_canonical)
+        # ---- S3: canonicalization (CC over the value graph) --------------
+        canonical = stage("s3_canonical", lambda: canonical_from_value_links(
+            edges, values, list(cfg.variables), cfg.case_sensitive
+        ))
 
         # ---- S4: triple materialization with span provenance ------------
         triples = stage("s4_triples", lambda: self._materialize_triples(mentions, canonical))

@@ -6,11 +6,34 @@ dedup with watermarked late-data handling.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..model import DOCS_SCHEMA
 from ..operators.extract import DEFAULT_RULES, extract_mentions
+
+
+def _text_of_spans() -> Column:
+    """A doc row's text spans joined by a space (media spans skipped)."""
+    return F.concat_ws(
+        " ",
+        F.transform(
+            F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
+            lambda s: s["text"],
+        ),
+    )
+
+
+def _drain(writer: DataStreamWriter, checkpoint: str | None = None) -> StreamingQuery:
+    """Start ``writer`` (checkpointed at ``checkpoint`` when given), run it
+    over the input available now, and return the stopped query."""
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
+    q = writer.start()
+    q.processAllAvailable()
+    q.stop()
+    return q
 
 
 def stream_docs(spark: SparkSession, path: str) -> DataFrame:
@@ -131,15 +154,9 @@ def streaming_exact_dedup(
 def run_stream_to_memory(stream_df: DataFrame, name: str, mode: str = "append"):
     """Drive a streaming query to completion over the currently available
     input (test harness path: memory sink + processAllAvailable)."""
-    q = (
-        stream_df.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
+    return _drain(
+        stream_df.writeStream.outputMode(mode).format("memory").queryName(name)
     )
-    q.processAllAvailable()
-    q.stop()
-    return q
 
 
 def streaming_curate(
@@ -162,13 +179,6 @@ def streaming_curate(
     from ..functions.text import quality_score
 
     deduped = streaming_exact_dedup(docs_stream, ts_col, watermark)
-    text = F.concat_ws(
-        " ",
-        F.transform(
-            F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
-            lambda s: s["text"],
-        ),
-    )
     redacted_spans = F.transform(
         F.col("spans"),
         lambda s: F.struct(
@@ -181,7 +191,7 @@ def streaming_curate(
         ),
     )
     return (
-        deduped.withColumn("__q", quality_score(text))
+        deduped.withColumn("__q", quality_score(_text_of_spans()))
         .where(F.col("__q") >= quality_min)
         .withColumn("spans", redacted_spans)
         .withColumn("quality", F.round("__q", 6))
@@ -276,14 +286,7 @@ def streaming_segment_dedup(
     when ``ts_col`` is given."""
     from ..operators.dedup import segment_array
 
-    text = F.concat_ws(
-        " ",
-        F.transform(
-            F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
-            lambda s: s["text"],
-        ),
-    )
-    cols = [F.col("doc_id"), text.alias("_text")] + (
+    cols = [F.col("doc_id"), _text_of_spans().alias("_text")] + (
         [F.col(ts_col)] if ts_col is not None else []
     )
     chunks = docs_stream.select(*cols).select(
@@ -311,15 +314,8 @@ def streaming_chunks(
     (doc_id, chunk_idx, chunk_text, n_tokens)."""
     from ..operators.chunk import chunk_documents
 
-    text = F.concat_ws(
-        " ",
-        F.transform(
-            F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
-            lambda s: s["text"],
-        ),
-    )
     return chunk_documents(
-        docs_stream.select("doc_id", text.alias("text")), window, stride
+        docs_stream.select("doc_id", _text_of_spans().alias("text")), window, stride
     )
 
 
@@ -343,27 +339,14 @@ def run_lm_score_stream(
     to completion over the available input and returns it stopped."""
     from ..operators.lm_quality import score_bigram_model
 
-    text = F.concat_ws(
-        " ",
-        F.transform(
-            F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
-            lambda s: s["text"],
-        ),
-    )
-    target = docs_stream.select("doc_id", text.alias("text"))
+    target = docs_stream.select("doc_id", _text_of_spans().alias("text"))
 
     def _batch(batch_df: DataFrame, _epoch: int) -> None:
         score_bigram_model(batch_df, model).write.mode("append").parquet(
             out_path
         )
 
-    writer = target.writeStream.foreachBatch(_batch)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
-    return q
+    return _drain(target.writeStream.foreachBatch(_batch), checkpoint)
 
 
 def run_asof_enrich_stream(
@@ -394,13 +377,7 @@ def run_asof_enrich_stream(
             right_cols=right_cols, tolerance_sec=tolerance_sec,
         ).write.mode("append").parquet(out_path)
 
-    writer = events_stream.writeStream.foreachBatch(_batch)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
-    return q
+    return _drain(events_stream.writeStream.foreachBatch(_batch), checkpoint)
 
 
 def run_span_dedup_stream(
@@ -431,14 +408,7 @@ def run_span_dedup_stream(
 
     spark = docs_stream.sparkSession
 
-    text = F.concat_ws(
-        " ",
-        F.transform(
-            F.filter(F.col("spans"), lambda s: s["kind"] == "text"),
-            lambda s: s["text"],
-        ),
-    )
-    target = docs_stream.select("doc_id", text.alias("text"))
+    target = docs_stream.select("doc_id", _text_of_spans().alias("text"))
 
     def _batch(batch_df: DataFrame, _epoch: int) -> None:
         try:
@@ -454,13 +424,7 @@ def run_span_dedup_stream(
         admitted.write.mode("append").parquet(out_path)
         new_fps.write.mode("append").parquet(store_path)
 
-    writer = target.writeStream.foreachBatch(_batch)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
-    return q
+    return _drain(target.writeStream.foreachBatch(_batch), checkpoint)
 
 
 def run_canonical_stream(
@@ -502,10 +466,4 @@ def run_canonical_stream(
         mode = "overwrite" if have else "error"
         updated.write.mode(mode).parquet(map_path)
 
-    writer = edges_stream.writeStream.foreachBatch(_batch)
-    if checkpoint is not None:
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    q.processAllAvailable()
-    q.stop()
-    return q
+    return _drain(edges_stream.writeStream.foreachBatch(_batch), checkpoint)

@@ -122,8 +122,8 @@ def test_connected_components_distributed_raises_past_its_bound(spark):
 
 def test_cc_nul_prefixed_node_names(spark):
     """Regression: pandas' string hash table follows C-string semantics
-    and collapses values at the first NUL byte — '\\x00'-prefixed
-    synthetic star nodes must stay distinct (bytes-factorize path)."""
+    and collapses values at the first NUL byte — ids that differ only
+    after a '\\x00' must stay distinct (bytes-factorize path)."""
     from abecto_spark.operators.closure import connected_components
 
     edges = spark.createDataFrame(

@@ -1,8 +1,9 @@
 """Equivalence of the two canonicalization paths: value-level CC
 (`canonical_from_value_links`, the scale path) must produce exactly the
-same clusters as resource-level CC over the fanned-out edges
-(`jw_mapping(star=True)` + `connected_components`), for the same values
-input. Randomized over seeds; also exercises multi-variable bridging."""
+same (resource, canonical_id) rows as resource-level CC over the pairwise
+resource edges (`jw_mapping` + `connected_components`), for the same
+values input. Randomized over seeds; also exercises multi-variable
+bridging."""
 
 import random
 
@@ -12,7 +13,6 @@ from pyspark.sql import functions as F
 from abecto_spark.operators.closure import (
     canonical_from_value_links,
     connected_components,
-    strip_synthetic,
 )
 from abecto_spark.operators.jw_mapping import jw_mapping
 
@@ -20,13 +20,6 @@ SCHEMA = (
     "dataset string, resource string, variable string, o_kind string,"
     "o_value string, o_datatype string, o_lang string"
 )
-
-
-def _clusters(rows):
-    by_canon = {}
-    for resource, canon in rows:
-        by_canon.setdefault(canon, set()).add(resource)
-    return sorted(tuple(sorted(v)) for v in by_canon.values())
 
 
 def _random_values(seed, n_entities=30, n_datasets=3, n_variables=2):
@@ -62,15 +55,15 @@ def test_value_level_cc_equals_resource_level(spark, seed):
     variables = ["var0", "var1"]
 
     edges = jw_mapping(values, variables, 0.90, case_sensitive=False,
-                       block="grams", star=True)
-    canon_res = strip_synthetic(connected_components(edges))
+                       block="grams")
+    canon_res = connected_components(edges)
 
     links = jw_mapping(values, variables, 0.90, case_sensitive=False,
                        block="grams", return_value_links=True)
     canon_val = canonical_from_value_links(links, values, variables, False)
 
-    a = _clusters([(r.resource, r.canonical_id) for r in canon_res.collect()])
-    b = _clusters([(r.resource, r.canonical_id) for r in canon_val.collect()])
+    a = sorted((r.resource, r.canonical_id) for r in canon_res.collect())
+    b = sorted((r.resource, r.canonical_id) for r in canon_val.collect())
     assert a == b, f"seed={seed}: resource-level {a} != value-level {b}"
 
     # canonical id is the cluster minimum in both paths
